@@ -15,6 +15,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
+from fineweb_domain_analyzer_spark.functions.sqltext import (
+    sql_array,
+    sql_ident,
+    sql_in,
+    sql_lit,
+)
+
 
 @pandas_udf(StringType())
 def decode_utf8_ignore_udf(payload: pd.Series) -> pd.Series:
@@ -73,11 +80,14 @@ def normalize_text(text: Column) -> Column:
 
 # --- tokenization ----------------------------------------------------------
 
+WS_PATTERN = r"\s+"
+
+
 def ws_tokens(text: Column) -> Column:
     """Whitespace tokenization as an array column. Matches
     ``re.split(r'\\s+')`` on trimmed text (both Spark and DuckDB agree
     on this shape, which the oracle queries rely on)."""
-    return F.split(F.trim(text), r"\s+")
+    return F.split(F.trim(text), WS_PATTERN)
 
 
 def ws_token_count(text: Column) -> Column:
@@ -108,46 +118,47 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
     "es": ("el", "la", "los", "y", "es", "una", "para", "en", "que", "por"),
 }
 
-
-def stopword_hits(text: Column, lang: str = "en") -> Column:
-    words = ws_tokens(F.lower(text))
-    arr = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
-    return F.size(F.filter(words, lambda t: F.array_contains(arr, t)))
+#: CJK unified ideographs (U+4E00-U+9FFF)
+CJK_CLASS = "[一-鿿]"
 
 
-def cjk_char_count(text: Column) -> Column:
-    """Count CJK-unified-ideograph chars (the reference fixtures carry a
-    chinese_chars field computed the same way upstream)."""
-    return F.length(text) - F.length(F.regexp_replace(text, r"[一-鿿]", ""))
+def _cjk_ratio_sql(text: str) -> str:
+    """Share of CJK-unified-ideograph chars (the reference fixtures carry
+    a chinese_chars field computed the same way upstream)."""
+    cjk = f"length({text}) - length(regexp_replace({text}, {sql_lit(CJK_CLASS)}, ''))"
+    return f"({cjk}) / greatest(length({text}), 1)"
 
 
-def langid_hits_from_tokens(lowered_tokens: Column, lang: str) -> Column:
-    arr = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
-    return F.size(F.filter(lowered_tokens, lambda t: F.array_contains(arr, t)))
+def _stopword_hits_sql(tokens: str, lang: str) -> str:
+    return (
+        f"size(filter({tokens}, t -> "
+        f"array_contains({sql_array(LANG_STOPWORDS[lang])}, t)))"
+    )
 
 
-def langid_from_hits(
-    hit_cols: dict[str, Column], cjk_ratio: Column
-) -> Column:
+def _langid_decision_sql(hits: dict[str, str], cjk_ratio: str) -> str:
     """Decision over integer hit counts (no float-equality hazards):
     CJK-ratio > 0.15 → 'zh'; else argmax hits with priority
     en > de > fr > es on ties; all-zero → 'unk'."""
-    best = F.greatest(*hit_cols.values())
-    guess = F.lit("unk")
-    for lang in reversed(list(hit_cols)):  # earlier langs win ties
-        guess = F.when(hit_cols[lang] == best, F.lit(lang)).otherwise(guess)
-    guess = F.when(best <= 0, F.lit("unk")).otherwise(guess)
-    return F.when(cjk_ratio > 0.15, F.lit("zh")).otherwise(guess)
+    best = f"greatest({', '.join(hits.values())})"
+    argmax = " ".join(
+        f"WHEN {h} = {best} THEN {sql_lit(lang)}" for lang, h in hits.items()
+    )
+    return (
+        f"CASE WHEN {cjk_ratio} > {sql_lit(0.15)} THEN 'zh' "
+        f"WHEN {best} <= 0 THEN 'unk' {argmax} ELSE 'unk' END"
+    )
 
 
-def langid_heuristic(text: Column) -> Column:
-    """Deterministic heuristic language ID (single-expression form —
-    fine for one-off use; the pipeline uses with_langid to stage the
-    token array once, keeping codegen methods small)."""
-    toks = ws_tokens(F.lower(text))
-    hits = {lang: langid_hits_from_tokens(toks, lang) for lang in LANG_STOPWORDS}
-    cjk_ratio = cjk_char_count(text) / F.greatest(F.length(text), F.lit(1))
-    return langid_from_hits(hits, cjk_ratio)
+def langid_heuristic(text_col: str = "text") -> Column:
+    """Deterministic heuristic language ID of column ``text_col``
+    (single-expression form — fine for one-off use; the pipeline uses
+    with_langid to stage the token array once, keeping codegen methods
+    small)."""
+    text = sql_ident(text_col)
+    toks = f"split(trim(lower({text})), {sql_lit(WS_PATTERN)})"
+    hits = {lang: _stopword_hits_sql(toks, lang) for lang in LANG_STOPWORDS}
+    return F.expr(_langid_decision_sql(hits, _cjk_ratio_sql(text)))
 
 
 def with_langid(
@@ -157,21 +168,22 @@ def with_langid(
     lower_tokens_col: str | None = None,
 ):
     """Staged-projection langid: token array materialized once, per-lang
-    hit counts as their own columns, decision from attribute refs.
+    hit counts as their own columns, decision from attribute refs. Each
+    stage is one ``withColumns`` of SQL text (functions/sqltext.py).
 
     ``lower_tokens_col`` lets the caller share an already-staged
     ws_tokens(lower(text)) column (the pipeline stages it once for
     langid AND the quality features — tokenization is the dominant
     per-row cost, so computing it once matters)."""
-    text = F.col(text_col)
+    text = sql_ident(text_col)
     if lower_tokens_col is None:
-        df = df.withColumn("_li_toks", ws_tokens(F.lower(text)))
-        toks, drop_toks = F.col("_li_toks"), ["_li_toks"]
+        df = df.withColumn("_li_toks", ws_tokens(F.lower(F.col(text_col))))
+        toks, drop_toks = sql_ident("_li_toks"), ["_li_toks"]
     else:
-        toks, drop_toks = F.col(lower_tokens_col), []
+        toks, drop_toks = sql_ident(lower_tokens_col), []
     # ALL per-language hit counts in ONE token pass: each token adds
-    # 1 << (16 * lang_index) to a packed long (isin compiles to an
-    # InSet hash probe), and the counts unpack as 16-bit fields — ~25%
+    # 1 << (16 * lang_index) to a packed long (IN compiles to an InSet
+    # hash probe), and the counts unpack as 16-bit fields — ~25%
     # cheaper than one filter() pass per language (measured 2.9 s vs
     # 3.9 s per 1.2M docs). The fast path is gated to docs with
     # < 32,768 tokens: per-field hit counts then max at 32,767, so no
@@ -182,41 +194,35 @@ def with_langid(
     # branches lazily per row, making the gate itself the protection).
     langs = list(LANG_STOPWORDS)
     assert len(langs) <= 4, "packed langid fields: 4 × 16-bit max in a long"
-
-    def _enc(t):
-        e = F.lit(0).cast("long")
-        for i, lang in enumerate(langs):
-            e = e + F.when(
-                t.isin(*LANG_STOPWORDS[lang]), F.lit(1 << (16 * i)).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-        return e
-
-    small = F.size(toks) < 32768
-    df = df.withColumn(
-        "_li_packed",
-        F.when(
-            small,
-            F.aggregate(toks, F.lit(0).cast("long"), lambda acc, t: acc + _enc(t)),
-        ).otherwise(F.lit(0).cast("long")),
+    small = f"size({toks}) < 32768"
+    enc = " + ".join(
+        f"CASE WHEN {sql_in('t', LANG_STOPWORDS[lang])} "
+        f"THEN {1 << (16 * i)}L ELSE 0L END"
+        for i, lang in enumerate(langs)
     )
-    cjk_ratio = cjk_char_count(text) / F.greatest(F.length(text), F.lit(1))
-    # hit counts STAGED as columns: langid_from_hits references each
-    # count several times (greatest + per-lang equality); per-hit CASE
-    # guards here measured +20% on the whole stage, so the size guard
-    # is ONE top-level CASE on the final decision instead — the slow
-    # per-language filter branch only executes for monster docs
-    for i, lang in enumerate(langs):
-        df = df.withColumn(
-            f"_li_h_{lang}",
-            F.shiftright(F.col("_li_packed"), 16 * i).bitwiseAND(F.lit(0xFFFF)),
+    df = df.withColumns({
+        "_li_packed": F.expr(
+            f"CASE WHEN {small} THEN aggregate({toks}, 0L, (acc, t) -> acc + {enc}) "
+            "ELSE 0L END"
         )
-    fast = langid_from_hits(
-        {lang: F.col(f"_li_h_{lang}") for lang in langs}, cjk_ratio
+    })
+    # hit counts STAGED as columns: the decision references each count
+    # several times (greatest + per-lang equality); per-hit CASE guards
+    # here measured +20% on the whole stage, so the size guard is ONE
+    # top-level CASE on the final decision instead — the slow
+    # per-language filter branch only executes for monster docs
+    df = df.withColumns({
+        f"_li_h_{lang}": F.expr(f"shiftright(_li_packed, {16 * i}) & 65535")
+        for i, lang in enumerate(langs)
+    })
+    cjk_ratio = _cjk_ratio_sql(text)
+    fast = _langid_decision_sql({lang: f"_li_h_{lang}" for lang in langs}, cjk_ratio)
+    slow = _langid_decision_sql(
+        {lang: _stopword_hits_sql(toks, lang) for lang in langs}, cjk_ratio
     )
-    slow = langid_from_hits(
-        {lang: langid_hits_from_tokens(toks, lang) for lang in langs}, cjk_ratio
+    df = df.withColumns(
+        {out_col: F.expr(f"CASE WHEN {small} THEN {fast} ELSE {slow} END")}
     )
-    df = df.withColumn(out_col, F.when(small, fast).otherwise(slow))
     return df.drop(
         *drop_toks, "_li_packed", *[f"_li_h_{lang}" for lang in langs]
     )

@@ -508,7 +508,7 @@ def q14_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = q._t(spark, sf_dir, "documents")
     return with_lang_consistency(docs, seg_tokens=q._Q106_SEG).select(
         "doc_id",
-        langid_heuristic(F.col("text")).alias("langid_pred"),
+        langid_heuristic("text").alias("langid_pred"),
         langid_udf_for("langid_fx")(F.col("text")).alias("ft_label"),
         "n_segments",
         "majority_lang",

@@ -36,6 +36,7 @@ from fineweb_domain_analyzer_spark.functions.domains import (
     extract_domain_udf,
     with_domain_sql,
 )
+from fineweb_domain_analyzer_spark.functions.sqltext import sql_ident, sql_lit
 
 # Drop-reason enum — unified across robots/quality/lang stages so the
 # lineage histogram (metrics.py) has one vocabulary.
@@ -70,13 +71,10 @@ def join_policy(
     never enforces disallowed_paths/crawl_delay —
     fineweb_analyzer.py:436-459); ``include_paths=True`` also carries
     ``disallowed_paths`` for the opt-in path-enforcement extension."""
-    cols = [
-        F.col("domain").alias("_policy_domain"),
-        F.col("crawl_allowed").alias("_policy_crawl_allowed"),
-    ]
+    cols = ["domain AS _policy_domain", "crawl_allowed AS _policy_crawl_allowed"]
     if include_paths:
-        cols.append(F.col("disallowed_paths").alias("_policy_disallowed_paths"))
-    dim = policy.select(*cols)
+        cols.append("disallowed_paths AS _policy_disallowed_paths")
+    dim = policy.selectExpr(*cols)
     if broadcast_dim:
         dim = F.broadcast(dim)
     return pages.join(dim, pages["domain"] == dim["_policy_domain"], "left").drop(
@@ -109,25 +107,26 @@ def path_disallowed(path: Column, disallowed_paths: Column) -> Column:
     return F.exists(paths, lambda p: path.startswith(p))
 
 
-def keep_predicate(url: Column, domain: Column, crawl_allowed: Column) -> Column:
-    """The F5 truth table as one vectorized boolean expression."""
-    no_url = url.isNull() | (url == "")
-    # reference line 459: `if domain and ...` — a null OR empty-string
-    # domain (urlparse of a scheme-less/invalid url yields netloc '')
-    # falls to the excluded branch.
-    has_domain = domain.isNotNull() & (domain != "")
-    return F.when(no_url, F.lit(True)).otherwise(
-        has_domain & F.coalesce(crawl_allowed, F.lit(True))
+def keep_predicate_sql(url: str, domain: str, crawl_allowed: str) -> str:
+    """The F5 truth table as one SQL boolean expression over SQL text
+    operands."""
+    return (
+        f"CASE WHEN {url} IS NULL OR {url} = '' THEN true "
+        # reference line 459: `if domain and ...` — a null OR
+        # empty-string domain (urlparse of a scheme-less/invalid url
+        # yields netloc '') falls to the excluded branch.
+        f"ELSE {domain} IS NOT NULL AND {domain} != '' "
+        f"AND coalesce({crawl_allowed}, true) END"
     )
 
 
-def drop_reason(url: Column, domain: Column, crawl_allowed: Column) -> Column:
-    no_url = url.isNull() | (url == "")
+def drop_reason_sql(url: str, domain: str, crawl_allowed: str) -> str:
     return (
-        F.when(no_url, F.lit(REASON_KEPT))
-        .when(domain.isNull() | (domain == ""), F.lit(REASON_BAD_URL))
-        .when(~F.coalesce(crawl_allowed, F.lit(True)), F.lit(REASON_ROBOTS_DISALLOWED))
-        .otherwise(F.lit(REASON_KEPT))
+        f"CASE WHEN {url} IS NULL OR {url} = '' THEN {sql_lit(REASON_KEPT)} "
+        f"WHEN {domain} IS NULL OR {domain} = '' THEN {sql_lit(REASON_BAD_URL)} "
+        f"WHEN NOT coalesce({crawl_allowed}, true) "
+        f"THEN {sql_lit(REASON_ROBOTS_DISALLOWED)} "
+        f"ELSE {sql_lit(REASON_KEPT)} END"
     )
 
 
@@ -155,13 +154,12 @@ def label_pages(
     labeled = join_policy(
         labeled, policy, broadcast_dim=broadcast_dim, include_paths=enforce_paths
     )
-    url = F.col(url_col)
-    dom = F.col("domain")
-    allowed = F.col("_policy_crawl_allowed")
-    keep = keep_predicate(url, dom, allowed)
-    reason = drop_reason(url, dom, allowed)
+    operands = (sql_ident(url_col), "domain", "_policy_crawl_allowed")
+    keep = F.expr(keep_predicate_sql(*operands))
+    reason = F.expr(drop_reason_sql(*operands))
     drop_cols = ["_policy_crawl_allowed"]
     if enforce_paths:
+        url = F.col(url_col)
         no_url = url.isNull() | (url == "")
         blocked = path_disallowed(url_path(url), F.col("_policy_disallowed_paths"))
         path_dropped = ~no_url & keep & blocked
@@ -170,11 +168,7 @@ def label_pages(
             reason
         )
         drop_cols.append("_policy_disallowed_paths")
-    return (
-        labeled.withColumn("keep", keep)
-        .withColumn("drop_reason", reason)
-        .drop(*drop_cols)
-    )
+    return labeled.withColumns({"keep": keep, "drop_reason": reason}).drop(*drop_cols)
 
 
 def split_kept_excluded(labeled: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -4,9 +4,14 @@ Reference (/root/reference/fineweb_analyzer.py:480-485) emits one global
 ``{total_processed, filtered_kept, excluded_count, keep_ratio}``. The
 north rule requires per-partition lineage (rows in/out) plus a
 drop-reason histogram; both are single partial-aggregating shuffles.
+``job.py`` collects its run report in the pass that writes instead (one
+``Observation`` per split) and only reads back splits committed without
+recorded counts.
 """
 
 from __future__ import annotations
+
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -51,6 +56,16 @@ def partition_lineage(labeled: DataFrame) -> DataFrame:
             F.round(F.col("filtered_kept") / F.col("total_processed") * 100, 2),
         )
     )
+
+
+def keep_ratio(kept: int, total: int) -> float:
+    """``filter_stats``' keep_ratio for counts held on the driver:
+    ``round(kept/total*100, 2)`` rounding half up like Spark's
+    ``round``, 0.0 on empty input."""
+    if total == 0:
+        return 0.0
+    pct = Decimal(repr(kept / total * 100))
+    return float(pct.quantize(Decimal("0.01"), rounding=ROUND_HALF_UP))
 
 
 def drop_reason_histogram(labeled: DataFrame) -> DataFrame:

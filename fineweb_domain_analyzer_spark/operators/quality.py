@@ -26,13 +26,21 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StringType
 
+from fineweb_domain_analyzer_spark.functions.sqltext import (
+    sql_array,
+    sql_ident,
+    sql_lit,
+)
 from fineweb_domain_analyzer_spark.functions.textfns import (
+    WS_PATTERN,
     ws_tokens,
 )
 
 # --- Gopher/C4-style heuristic features (all JVM-side) ----------------------
 
 STOPWORDS_EN = ("the", "be", "to", "of", "and", "that", "have", "with", "a", "in")
+#: chars that are NOT symbols for symbol_ratio
+SYMBOL_FREE_CLASS = r"[A-Za-z0-9\s]"
 
 
 def with_quality_features(
@@ -56,7 +64,9 @@ def with_quality_features(
     attribute references — CollapseProject keeps multi-referenced
     non-trivial expressions in separate projects, so each codegen
     method stays small and the whole thing still fuses into one map
-    stage.
+    stage. Each stage is one ``withColumns`` of SQL text
+    (functions/sqltext.py), one Py4J call per column instead of one per
+    expression node.
 
     Expression notes: the run-break sentinel " " can never equal a
     whitespace-split token (a NUL literal breaks codegen string
@@ -67,13 +77,13 @@ def with_quality_features(
     lambda index; empty text tokenizes to [''] and must not count as a
     run.
     """
-    text = F.col(text_col)
+    text = sql_ident(text_col)
     drop_cols = ["_qf_n", "_qf_st", "_qf_rb", "_qf_ix", "_qf_maxrun"]
     if lower_tokens_col is None:
-        df = df.withColumn("_qf_lw", ws_tokens(F.lower(text)))
+        df = df.withColumn("_qf_lw", ws_tokens(F.lower(F.col(text_col))))
         lower_tokens_col = "_qf_lw"
         drop_cols.append("_qf_lw")
-    lw = F.col(lower_tokens_col)
+    lw = sql_ident(lower_tokens_col)
     # word_count reads the LOWERCASED token array (whitespace-splitting
     # commutes with lower(), so token counts are identical), dropping
     # the original-case tokenize pass; mean_word_len's length sum is
@@ -84,79 +94,37 @@ def with_quality_features(
     # lower()-based sum would break oracle parity on such text.
     # Together ~1s/1.2M docs off the feature stage vs the original
     # tokenize + per-token aggregate.
-    df = df.withColumn(
-        "_qf_n",
-        F.when(F.length(F.trim(text)) == 0, F.lit(0)).otherwise(F.size(lw)),
-    ).withColumn("_qf_st", F.array_sort(lw))
-    df = df.withColumn(
-        "_qf_rb",
-        F.zip_with(
-            F.col("_qf_st"),
-            F.slice(
-                F.concat(F.col("_qf_st"), F.array(F.lit(" "))), 2, F.size("_qf_st")
-            ),
-            lambda a, b: (a != b).cast("int"),
-        ),
-    )
-    df = df.withColumn(
-        "_qf_ix",
-        F.filter(
-            F.transform(
-                F.col("_qf_rb"),
-                lambda x, i: F.when(x == 1, i + 1).otherwise(F.lit(-1)),
-            ),
-            lambda v: v >= 0,
-        ),
-    )
-    df = df.withColumn(
-        "_qf_maxrun",
-        F.coalesce(
-            F.array_max(
-                F.transform(
-                    F.col("_qf_ix"),
-                    lambda v, i: v
-                    - F.coalesce(
-                        F.when(i > 0, F.element_at(F.col("_qf_ix"), i.cast("int"))),
-                        F.lit(0),
-                    ),
-                )
-            ),
-            F.lit(0),
-        ),
-    )
-    n = F.col("_qf_n")
-    n1 = F.greatest(n, F.lit(1))
-    chars = F.greatest(F.length(text), F.lit(1))
-    stop_arr = F.array(*[F.lit(w) for w in STOPWORDS_EN])
-    df = (
-        df.withColumn("word_count", n)
-        .withColumn(
-            "mean_word_len",
-            F.round(
-                F.length(F.regexp_replace(F.trim(text), r"\s+", "")) / n1, 4
-            ),
-        )
-        .withColumn(
-            "symbol_ratio",
-            F.round(
-                F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]", "")) / chars, 4
-            ),
-        )
-        .withColumn(
-            "stopword_density",
-            F.round(
-                F.size(F.filter(lw, lambda t: F.array_contains(stop_arr, t)))
-                / n1,
-                4,
-            ),
-        )
-        .withColumn(
-            "max_word_repeat_ratio",
-            F.when(n == 0, F.lit(0.0)).otherwise(
-                F.round(F.col("_qf_maxrun") / n1, 4)
-            ),
-        )
-    )
+    stages = [
+        {
+            "_qf_n": f"CASE WHEN length(trim({text})) = 0 THEN 0 ELSE size({lw}) END",
+            "_qf_st": f"array_sort({lw})",
+        },
+        {
+            "_qf_rb": "zip_with(_qf_st, slice(concat(_qf_st, array(' ')), 2, "
+            "size(_qf_st)), (a, b) -> CAST(a != b AS INT))",
+        },
+        {
+            "_qf_ix": "filter(transform(_qf_rb, (x, i) -> "
+            "CASE WHEN x = 1 THEN i + 1 ELSE -1 END), v -> v >= 0)",
+        },
+        {
+            "_qf_maxrun": "coalesce(array_max(transform(_qf_ix, (v, i) -> v - "
+            "coalesce(CASE WHEN i > 0 THEN element_at(_qf_ix, i) END, 0))), 0)",
+        },
+        {
+            "word_count": "_qf_n",
+            "mean_word_len": "round(length(regexp_replace("
+            f"trim({text}), {sql_lit(WS_PATTERN)}, '')) / greatest(_qf_n, 1), 4)",
+            "symbol_ratio": f"round(length(regexp_replace({text}, "
+            f"{sql_lit(SYMBOL_FREE_CLASS)}, '')) / greatest(length({text}), 1), 4)",
+            "stopword_density": f"round(size(filter({lw}, t -> "
+            f"array_contains({sql_array(STOPWORDS_EN)}, t))) / greatest(_qf_n, 1), 4)",
+            "max_word_repeat_ratio": "CASE WHEN _qf_n = 0 THEN 0.0D "
+            "ELSE round(_qf_maxrun / greatest(_qf_n, 1), 4) END",
+        },
+    ]
+    for stage in stages:
+        df = df.withColumns({c: F.expr(sql) for c, sql in stage.items()})
     return df.drop(*drop_cols)
 
 
@@ -174,7 +142,9 @@ def gopher_keep(
     min_stopword_density: float = 0.0,
     max_repeat_ratio: float = 0.35,
 ) -> Column:
-    """Gopher-rule keep decision over the heuristic features."""
+    """Gopher-rule keep decision over the heuristic features: a Column
+    over Column features, SQL text over ``sqltext.SqlExpr`` features
+    (the pipeline's reason chain)."""
     return (
         word_count.between(min_words, max_words)
         & mean_word_len.between(min_mean_word_len, max_mean_word_len)
@@ -1287,7 +1257,9 @@ def with_doc_shape_features(
                                 rtrim ends with ``...`` or ``…``
                                 (Gopher drops > 0.3)
     * ``alpha_word_frac``     — fraction of words containing at least
-                                one alphabetic char (Gopher keeps ≥ 0.8)
+                                one letter (Unicode ``\\p{L}``, so CJK
+                                and accented words count; Gopher
+                                keeps ≥ 0.8)
     * ``hash_word_ratio``     — ``#`` chars per word (Gopher drops > 0.1)
     * ``ellipsis_word_ratio`` — ellipsis occurrences per word
                                 (Gopher drops > 0.1)
@@ -1329,7 +1301,9 @@ def with_doc_shape_features(
     )
     words = F.when(F.length(F.trim(text)) == 0, F.lit(0)).otherwise(F.size(lw))
     w1 = F.greatest(words, F.lit(1))
-    alpha = F.size(F.filter(lw, lambda t: t.rlike("[a-z]")))
+    # any Unicode letter: an [a-z] class would zero out CJK words and
+    # accented-only words like "à", dropping allowed zh/fr/de docs
+    alpha = F.size(F.filter(lw, lambda t: t.rlike(r"\p{L}")))
     hash_cnt = F.length(text) - F.length(F.replace(text, F.lit("#"), F.lit("")))
     ell_cnt = (
         F.length(text) - F.length(F.replace(text, F.lit("..."), F.lit("")))
@@ -1357,7 +1331,8 @@ def gopher_doc_shape_keep(
     min_alpha_word_frac: float = 0.8,
     max_symbol_word_ratio: float = 0.1,
 ) -> Column:
-    """Gopher's doc-shape keep decision (paper §A1.1 thresholds)."""
+    """Gopher's doc-shape keep decision (paper §A1.1 thresholds); like
+    ``gopher_keep``, over Columns or ``sqltext.SqlExpr`` features."""
     return (
         (bullet_start_frac <= max_bullet_frac)
         & (ellipsis_end_frac <= max_ellipsis_frac)

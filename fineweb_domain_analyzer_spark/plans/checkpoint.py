@@ -6,7 +6,9 @@ everything). Design (SURVEY §7.5):
 
 * Work is partitioned by an INPUT SPLIT KEY (e.g. source file path, or
   a stable bucket of url) — the unit of atomic progress.
-* Each successful unit commit appends its split key to a manifest.
+* Each successful unit commit appends its split key to a manifest,
+  together with the counts observed while the unit was written
+  (``run_resumable``'s ``split_stats``), if any.
   With Iceberg, the manifest is the snapshot summary property
   ``processed-splits`` (atomic with the data commit). Without Iceberg
   (this sandbox), the manifest is a JSON file written AFTER the unit's
@@ -27,7 +29,7 @@ import json
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -43,34 +45,55 @@ class Checkpointer:
     def __init__(self, manifest_path: str):
         self.manifest_path = manifest_path
 
-    def processed_splits(self) -> set[str]:
+    def _load(self) -> dict:
         if not os.path.exists(self.manifest_path):
-            return set()
+            return {"splits": []}
         with open(self.manifest_path, encoding="utf-8") as f:
-            return set(json.load(f)["splits"])
+            return json.load(f)
 
-    def _write_manifest(self, splits: set[str]) -> None:
+    def processed_splits(self) -> set[str]:
+        return set(self._load()["splits"])
+
+    def split_counts(self) -> dict[str, dict]:
+        """Counts recorded with each committed split (``run_resumable``'s
+        ``split_stats``). A split committed without counts — or by a
+        manifest written before counts were recorded, which holds only
+        ``{"splits": [...]}`` — has no entry."""
+        return self._load().get("counts", {})
+
+    def _write_manifest(self, splits: set[str], counts: dict[str, dict]) -> None:
         """The ONE manifest commit path (tmp write + os.replace, atomic
         on POSIX) — ingest and compaction must share durability/format,
-        so any future fsync/versioning change lands in both."""
+        so any future fsync/versioning change lands in both. A split's
+        counts land in the same replace as the split itself, so a
+        reader never sees one without the other."""
         d = os.path.dirname(self.manifest_path) or "."
         os.makedirs(d, exist_ok=True)
+        manifest = {"splits": sorted(splits)}
+        counts = {s: c for s, c in counts.items() if s in splits}
+        if counts:
+            manifest["counts"] = dict(sorted(counts.items()))
         fd, tmp = tempfile.mkstemp(dir=d)
         with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump({"splits": sorted(splits)}, f)
+            json.dump(manifest, f)
         os.replace(tmp, self.manifest_path)
 
-    def mark_processed(self, split: str) -> None:
-        splits = self.processed_splits()
-        splits.add(split)
-        self._write_manifest(splits)
+    def mark_processed(self, split: str, counts: dict | None = None) -> None:
+        manifest = self._load()
+        splits = set(manifest["splits"]) | {split}
+        recorded = manifest.get("counts", {})
+        if counts is None:
+            recorded.pop(split, None)
+        else:
+            recorded[split] = counts
+        self._write_manifest(splits, recorded)
 
     def replace_splits(self, splits: set[str]) -> None:
         """Atomically REPLACE the manifest's split set (compaction:
         many ingested splits fold into one compacted split in a single
         os.replace — readers see either the old set or the new set,
         never a mix)."""
-        self._write_manifest(splits)
+        self._write_manifest(splits, self.split_counts())
 
     def pending(self, all_splits: list[str]) -> list[str]:
         done = self.processed_splits()
@@ -84,9 +107,17 @@ def run_resumable(
     out_path: str,
     checkpointer: Checkpointer,
     split_col: str = "_split",
+    split_stats: list[Column] | None = None,
 ) -> list[str]:
     """Process pending splits one unit at a time with idempotent
     overwrite-by-split commits. Returns the splits processed this run.
+
+    ``split_stats`` (aggregate Columns) are observed on each split's
+    write — one ``Observation`` per split, collected in the same pass
+    that writes — and recorded with the split in the manifest
+    (``Checkpointer.split_counts``). Observed metrics are merged from
+    the write's successful tasks only, so a retried task is not
+    counted twice.
 
     At cluster scale each 'split' is typically a batch of hundreds of
     files — unit granularity trades resume precision against commit
@@ -102,12 +133,16 @@ def run_resumable(
         done_now = []
         for split in checkpointer.pending(splits):
             df = process_split(spark, split).withColumn(split_col, F.lit(split))
+            obs = None
+            if split_stats:
+                obs = Observation()
+                df = df.observe(obs, *split_stats)
             (
                 df.write.mode("overwrite")
                 .partitionBy(split_col)
                 .parquet(out_path)
             )
-            checkpointer.mark_processed(split)
+            checkpointer.mark_processed(split, obs.get if obs else None)
             done_now.append(split)
         return done_now
     finally:
@@ -182,9 +217,11 @@ class IcebergCheckpointer(Checkpointer):
         props = {r["key"]: r["value"] for r in rows}
         return set(json.loads(props.get(self.PROP, "[]")))
 
-    def mark_processed(self, split: str) -> None:
+    def mark_processed(self, split: str, counts: dict | None = None) -> None:
+        """The catalog branch records the split only, not its
+        ``counts``."""
         if not self._have_iceberg:
-            return super().mark_processed(split)
+            return super().mark_processed(split, counts)
         splits = sorted(self.processed_splits() | {split})
         payload = json.dumps(splits).replace("'", "''")
         self.spark.sql(

@@ -24,12 +24,15 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fineweb_domain_analyzer_spark.functions.scrub import scrub_all
+from fineweb_domain_analyzer_spark.functions.sqltext import sql_cols, sql_in, sql_lit
 from fineweb_domain_analyzer_spark.functions.textfns import (
     decode_utf8_ignore_udf,
+    with_langid,
+    ws_tokens,
 )
 from fineweb_domain_analyzer_spark.operators.filtering import (
     REASON_BAD_URL,
@@ -47,6 +50,17 @@ REASON_QUALITY = "quality_filtered"
 REASON_CLASSIFIER = "classifier_filtered"
 REASON_PAGE_TYPE = "page_type_filtered"
 REASON_DOC_SHAPE = "doc_shape_filtered"
+#: every drop_reason quality_filter_pipeline can emit
+DROP_REASONS = (
+    REASON_KEPT,
+    REASON_ROBOTS_DISALLOWED,
+    REASON_BAD_URL,
+    REASON_LANGUAGE,
+    REASON_PAGE_TYPE,
+    REASON_QUALITY,
+    REASON_DOC_SHAPE,
+    REASON_CLASSIFIER,
+)
 
 
 @dataclass
@@ -118,12 +132,8 @@ def quality_filter_pipeline(
             ),
         )
     labeled = label_pages(df, policy, exact_domain=cfg.exact_domain)
-    labeled = labeled.withColumnRenamed("keep", "_robots_keep").withColumnRenamed(
-        "drop_reason", "_robots_reason"
-    )
-    from fineweb_domain_analyzer_spark.functions.textfns import (
-        with_langid,
-        ws_tokens,
+    labeled = labeled.withColumnsRenamed(
+        {"keep": "_robots_keep", "drop_reason": "_robots_reason"}
     )
 
     # tokenize+lowercase once; langid and the quality features share the
@@ -138,21 +148,25 @@ def quality_filter_pipeline(
 
         labeled = with_doc_shape_features(labeled, lower_tokens_col="_toks_lw")
     labeled = labeled.drop("_toks_lw")
+    # the reason chain is ONE SQL CASE (functions/sqltext.py): the keep
+    # rules render as SQL text from SqlExpr operands
     q_keep = gopher_keep(
-        F.col("word_count"),
-        F.col("mean_word_len"),
-        F.col("symbol_ratio"),
-        F.col("stopword_density"),
-        F.col("max_word_repeat_ratio"),
+        *sql_cols(
+            "word_count",
+            "mean_word_len",
+            "symbol_ratio",
+            "stopword_density",
+            "max_word_repeat_ratio",
+        ),
         min_words=cfg.min_words,
         max_words=cfg.max_words,
         max_symbol_ratio=cfg.max_symbol_ratio,
         max_repeat_ratio=cfg.max_repeat_ratio,
     )
-    lang_keep = F.col("langid").isin(*cfg.allowed_langs)
-    reason = F.when(
-        F.col("_robots_reason") != REASON_KEPT, F.col("_robots_reason")
-    ).when(~lang_keep, F.lit(REASON_LANGUAGE))
+    whens = [
+        (f"_robots_reason != {sql_lit(REASON_KEPT)}", "_robots_reason"),
+        (f"NOT ({sql_in('langid', cfg.allowed_langs)})", sql_lit(REASON_LANGUAGE)),
+    ]
     if cfg.drop_page_types:
         from fineweb_domain_analyzer_spark.operators.pagetype import (
             with_page_type,
@@ -166,43 +180,43 @@ def quality_filter_pipeline(
             rules=cfg.page_type_rules,
             scan_chars=cfg.page_type_scan_chars,
         )
-        reason = reason.when(
-            F.col("page_type").isin(*cfg.drop_page_types),
-            F.lit(REASON_PAGE_TYPE),
+        whens.append(
+            (sql_in("page_type", cfg.drop_page_types), sql_lit(REASON_PAGE_TYPE))
         )
-    reason = reason.when(~q_keep, F.lit(REASON_QUALITY))
+    whens.append(((~q_keep).sql, sql_lit(REASON_QUALITY)))
     if cfg.enforce_doc_shape:
         from fineweb_domain_analyzer_spark.operators.quality import (
             gopher_doc_shape_keep,
         )
 
         shape_keep = gopher_doc_shape_keep(
-            F.col("bullet_start_frac"),
-            F.col("ellipsis_end_frac"),
-            F.col("alpha_word_frac"),
-            F.col("hash_word_ratio"),
-            F.col("ellipsis_word_ratio"),
+            *sql_cols(
+                "bullet_start_frac",
+                "ellipsis_end_frac",
+                "alpha_word_frac",
+                "hash_word_ratio",
+                "ellipsis_word_ratio",
+            )
         )
-        reason = reason.when(~shape_keep, F.lit(REASON_DOC_SHAPE))
+        whens.append(((~shape_keep).sql, sql_lit(REASON_DOC_SHAPE)))
     if cfg.quality_weights is not None:
         from fineweb_domain_analyzer_spark.operators.quality import (
             with_quality_score,
         )
 
         labeled = with_quality_score(labeled, weights=cfg.quality_weights)
-        clf_keep = F.col("quality_score") >= F.lit(float(cfg.min_quality_score))
         # null score (null text) is NOT classifier-dropped, mirroring
         # the heuristic gates' permissive null semantics
-        reason = reason.when(~clf_keep, F.lit(REASON_CLASSIFIER))
-    reason = reason.otherwise(F.lit(REASON_KEPT))
-    out = (
-        labeled.withColumn("drop_reason", reason)
-        .withColumn("keep", F.col("drop_reason") == REASON_KEPT)
-        .drop("_robots_keep", "_robots_reason")
+        clf_keep = f"quality_score >= {sql_lit(float(cfg.min_quality_score))}"
+        whens.append((f"NOT ({clf_keep})", sql_lit(REASON_CLASSIFIER)))
+    reason = " ".join(f"WHEN {cond} THEN {value}" for cond, value in whens)
+    out = labeled.withColumn(
+        "drop_reason", F.expr(f"CASE {reason} ELSE {sql_lit(REASON_KEPT)} END")
     )
+    final = {"keep": F.expr(f"drop_reason = {sql_lit(REASON_KEPT)}")}
     if cfg.scrub:
-        out = out.withColumn("scrubbed_text", scrub_all(F.col("text")))
-    return out
+        final["scrubbed_text"] = scrub_all(F.col("text"))
+    return out.withColumns(final).drop("_robots_keep", "_robots_reason")
 
 
 def write_pipeline_output(

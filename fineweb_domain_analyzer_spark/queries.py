@@ -512,7 +512,7 @@ def q14_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fineweb_domain_analyzer_spark.functions.textfns import langid_heuristic
 
     docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", langid_heuristic(F.col("text")).alias("langid_pred"))
+    return docs.select("doc_id", langid_heuristic("text").alias("langid_pred"))
 
 
 def _langid_sql() -> str:
@@ -5081,7 +5081,7 @@ WITH shape_base AS (
   SELECT doc_id,
          {lines} AS lines,
          {wc} AS words,
-         len(list_filter({TOKS_SQL}, t -> regexp_matches(t, '[a-z]')))
+         len(list_filter({TOKS_SQL}, t -> regexp_matches(t, '\\p{{L}}')))
            AS alpha_words,
          length(text) - length(replace(text, '#', '')) AS hash_cnt,
          (length(text) - length(replace(text, '...', ''))) / 3

@@ -758,6 +758,27 @@ class TestClusterRepresentatives:
         }
         assert reps == {1: (10, 2), 2: (20, 2), 3: (30, 1)}
 
+    def test_id_col_breaks_ties(self, spark):
+        """Tied order_cols fall back to id_col (ascending), whatever
+        order the rows arrive in."""
+        from pyspark.sql import functions as F
+
+        from fineweb_domain_analyzer_spark.operators.dedup import (
+            select_cluster_representatives,
+        )
+
+        rows = [(1, 12, 0.5), (1, 11, 0.5), (1, 10, 0.5), (2, 22, 0.7), (2, 21, 0.7)]
+        df = spark.createDataFrame(
+            rows, "cluster int, uid int, score double"
+        ).coalesce(1)
+        reps = {
+            r["cluster"]: r["uid"]
+            for r in select_cluster_representatives(
+                df, "cluster", [F.col("score").desc()], id_col="uid"
+            ).collect()
+        }
+        assert reps == {1: 10, 2: 21}
+
     def test_q114_original_always_beats_spam_tail(self, spark):
         from fineweb_domain_analyzer_spark.queries import q114_best_of_cluster
 

@@ -52,6 +52,20 @@ class TestFeatures:
         r = shape(spark, "word 123 456 word2")  # 2 of 4 contain a letter
         assert r["alpha_word_frac"] == 0.5
 
+    @pytest.mark.parametrize(
+        "text,expected",
+        [
+            # whitespace-separated CJK words have no [a-z] char at all
+            ("这是 一段 中文 文本 用来 测试", 1.0),
+            # 3 of 11 tokens are the accented-only word "à"
+            ("il va à la gare à pied à midi avec son ami", 1.0),
+            ("größe ärger über öl", 1.0),
+            ("word 123 über 456", 0.5),
+        ],
+    )
+    def test_alpha_word_frac_counts_unicode_letters(self, spark, text, expected):
+        assert shape(spark, text)["alpha_word_frac"] == expected
+
     def test_symbol_ratios(self, spark):
         # 10 words, 2 '#' chars, 1 '...' and 1 '…' => 2 ellipses
         r = shape(
@@ -166,6 +180,25 @@ class TestPipelineGate:
         assert rows["https://a.example.com/1"]["drop_reason"] == REASON_DOC_SHAPE
         assert not rows["https://a.example.com/1"]["keep"]
         assert rows["https://a.example.com/2"]["drop_reason"] == "kept"
+
+    def test_gate_keeps_accented_text(self, spark, frames):
+        """An allowed-language doc whose words are letters outside
+        [a-z] is not a doc-shape drop."""
+        from fineweb_domain_analyzer_spark.plans.pipeline import (
+            PipelineConfig,
+            quality_filter_pipeline,
+        )
+
+        _, policy = frames
+        pages = spark.createDataFrame(
+            [("https://a.example.com/fr", "il va à la gare à pied à midi avec son ami")],
+            "url string, text string",
+        )
+        out = quality_filter_pipeline(
+            pages, policy, PipelineConfig(scrub=False, enforce_doc_shape=True)
+        ).collect()[0]
+        assert out["langid"] == "fr"
+        assert out["drop_reason"] == "kept"
 
     def test_gate_stays_one_map_stage(self, frames):
         from fineweb_domain_analyzer_spark.plans.pipeline import (

@@ -50,8 +50,8 @@ def test_job_resume_skips_committed_splits(spark, tmp_path, capsys):
     assert job.main(common) == 0
     first = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert len(first["splits_processed"]) == 2
-    # second invocation: everything committed, nothing reprocessed,
-    # read-back metrics unchanged
+    # second invocation: everything committed, nothing reprocessed; the
+    # report sums the counts recorded in the manifest, so it is unchanged
     assert job.main(common) == 0
     second = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert second["splits_processed"] == []
@@ -63,8 +63,8 @@ def test_spark_submit_py_files_packaging(tmp_path):
     it through REAL ``spark-submit --py-files`` in a subprocess whose
     environment cannot import the repo (PYTHONPATH cleared, cwd outside
     the repo) — so every import, driver AND Python-UDF worker side, must
-    resolve from the zip. Asserts the job completes and prints its
-    read-back metrics report."""
+    resolve from the zip. Asserts the job completes and prints its run
+    report (counts observed while writing, summed from the manifest)."""
     import os
     import subprocess
     import sys
@@ -129,6 +129,83 @@ def test_spark_submit_py_files_packaging(tmp_path):
     assert sorted(report["splits_processed"]) == ["0", "1"]
     assert report["total"] == report["kept"] + report["excluded"] > 0
     assert report["lineage_partitions"] > 0
+
+
+def _read_back(spark, out):
+    """The report's figures recomputed from the committed output."""
+    from fineweb_domain_analyzer_spark.operators.metrics import (
+        drop_reason_histogram,
+        filter_stats,
+    )
+
+    written = spark.read.parquet(str(out))
+    stats = filter_stats(written.withColumn("keep", written["drop_reason"] == "kept"))
+    s = stats.collect()[0]
+    return {
+        "total": s["total_processed"],
+        "kept": s["filtered_kept"],
+        "excluded": s["excluded_count"],
+        "keep_ratio": s["keep_ratio"],
+        "drop_reason_histogram": {
+            r["drop_reason"]: r["cnt"] for r in drop_reason_histogram(written).collect()
+        },
+    }
+
+
+def test_job_report_comes_from_the_write(spark, tmp_path, capsys, monkeypatch):
+    """The report is collected while run_resumable writes: once it has
+    committed, job.main starts no Spark job, and the report equals a
+    read-back of the output — on a fresh 16-split run, on a resumed run
+    that processes nothing, and (through one read-back) for a manifest
+    that records no counts."""
+    sc = spark.sparkContext
+    out, manifest = tmp_path / "out", tmp_path / "m.json"
+    argv = [
+        "--synth-rows", "4000",
+        "--splits", ",".join(str(i) for i in range(16)),
+        "--output", str(out),
+        "--manifest", str(manifest),
+        "--master", "local[4]",
+    ]
+    after_commit = []
+    run_resumable = job.run_resumable
+
+    def last_job_id():
+        return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+
+    def tracked(*args, **kwargs):
+        done = run_resumable(*args, **kwargs)
+        after_commit.append(last_job_id())
+        return done
+
+    monkeypatch.setattr(job, "run_resumable", tracked)
+    keys = ["total", "kept", "excluded", "keep_ratio", "drop_reason_histogram"]
+
+    def run():
+        assert job.main(argv) == 0
+        report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        return report, last_job_id() - after_commit[-1]
+
+    fresh, jobs_after = run()
+    assert len(fresh["splits_processed"]) == 16
+    assert jobs_after == 0
+    want = _read_back(spark, out)
+    assert {k: fresh[k] for k in keys} == want
+    assert want["total"] == 4000
+    assert fresh["lineage_partitions"] == 16
+
+    resumed, jobs_after = run()
+    assert resumed["splits_processed"] == []
+    assert jobs_after == 0
+    assert {k: resumed[k] for k in keys} == want
+
+    # a manifest written before per-split counts were recorded
+    splits = json.loads(manifest.read_text())["splits"]
+    manifest.write_text(json.dumps({"splits": splits}))
+    legacy, _ = run()
+    assert legacy["splits_processed"] == []
+    assert {k: legacy[k] for k in keys} == want
+    assert legacy["lineage_partitions"] == 0
 
 
 class TestDataCardNullGroups:

@@ -344,3 +344,57 @@ def test_jvm_domain_path_labels_match_exact_udf(spark, pages, policy):
         ).select("url", "keep", "drop_reason").collect()
     }
     assert exact == jvm
+
+
+def test_plan_construction_py4j_budget(pages, policy, monkeypatch):
+    """Building the flagship plan costs a small, fixed number of Py4J
+    commands: its staged projections are SQL text, one ``F.expr`` per
+    column. Built from Python Column trees (one command per expression
+    node) the same plan took 3,088 commands; the budget is a fifth of
+    that. Memory-delete commands (``m\\nd\\n``) come from Python's
+    garbage collector, not from the build, and are not counted."""
+    from py4j.clientserver import ClientServerConnection
+
+    quality_filter_pipeline(pages, policy, PipelineConfig())  # warm caches
+    send = ClientServerConnection.send_command
+    sent = []
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    quality_filter_pipeline(pages, policy, PipelineConfig())
+    monkeypatch.undo()
+    assert 0 < len(sent) <= 3088 // 5
+
+
+def test_sql_literals_round_trip(spark):
+    """Every Python value enters the generated SQL text through
+    sql_lit: quotes and backslashes survive the parser unchanged, and
+    numbers keep the type F.lit gives them."""
+    from fineweb_domain_analyzer_spark.functions.sqltext import (
+        sql_array,
+        sql_in,
+        sql_lit,
+    )
+
+    words = ["it's", "back\\slash", "\\'", "end\\", "'", "ünï 中", "", "%_\\n"]
+    row = spark.range(1).select(
+        *[F.expr(sql_lit(w)).alias(f"w{i}") for i, w in enumerate(words)],
+        F.expr(sql_array(words)).alias("arr"),
+        F.expr(sql_lit(2**40)).alias("big"),
+        F.expr(sql_lit(0.15)).alias("dbl"),
+        F.expr(sql_lit(-3)).alias("neg"),
+    )
+    got = row.collect()[0]
+    assert [got[f"w{i}"] for i in range(len(words))] == words
+    assert got["arr"] == words
+    assert (got["big"], got["dbl"], got["neg"]) == (2**40, 0.15, -3)
+    types = {f.name: f.dataType.simpleString() for f in row.schema.fields}
+    assert (types["big"], types["dbl"], types["neg"]) == ("bigint", "double", "int")
+    # a stopword list holding such terms matches them as tokens
+    toks = spark.createDataFrame([(w,) for w in words + ["other"]], "t string")
+    hits = toks.filter(F.expr(sql_in("t", words))).collect()
+    assert sorted(r["t"] for r in hits) == sorted(words)

@@ -91,7 +91,7 @@ def test_langid_heuristic(spark):
             (6, "zzz qqq xxx"),
         ],
         ["id", "text"],
-    ).withColumn("lid", langid_heuristic(F.col("text")))
+    ).withColumn("lid", langid_heuristic("text"))
     got = {r["id"]: r["lid"] for r in rows.collect()}
     assert got[1] == "en"
     assert got[2] == "de"
