@@ -17,7 +17,9 @@ excluded_*.jsonl / filter_stats_*.json, reference lines 203-244,
 
 * --check-robots performs NO network I/O by default: robots bodies come
   from --robots-content (a JSON map domain → robots.txt text, e.g. a
-  frozen snapshot) or every domain defaults to allowed. --fetch-live
+  frozen snapshot) or every domain defaults to allowed; both the bodies
+  and the domain list are already in driver memory, so they are parsed
+  there (parse_robots_py), without a Spark job. --fetch-live
   opts into the distributed live pre-fetch job
   (functions/robots.py:fetch_robots_policy — bounded per-task
   concurrency, reference retry semantics); tests exercise it only with
@@ -25,6 +27,13 @@ excluded_*.jsonl / filter_stats_*.json, reference lines 203-244,
 * filtered/excluded JSONL lines are byte-identical to the input lines
   (raw passthrough), exactly like the reference.
 * timestamped filenames use an injectable --run-ts for determinism.
+
+--extract-domains and --all-steps parse the JSONL dump once and run the
+domain UDF once per document: the parsed, domain-labeled pages
+(``_read_pages``) are persisted and feed both the domain statistics and
+the keep/drop filter. The persisted frame is also a fence: without it
+Catalyst pushes domain_stats' non-empty-domain filter below the UDF's
+projection and evaluates the UDF twice per row.
 """
 
 from __future__ import annotations
@@ -35,6 +44,7 @@ import json
 import os
 import sys
 import time
+from contextlib import contextmanager
 from datetime import datetime
 from pathlib import Path
 
@@ -42,12 +52,13 @@ from pyspark.sql import functions as F
 
 from fineweb_domain_analyzer_spark.functions.robots import (
     load_policy_fixture,
-    policy_from_robots_content,
+    parse_robots_py,
 )
 from fineweb_domain_analyzer_spark.operators.domain_stats import domain_stats
-from fineweb_domain_analyzer_spark.operators.filtering import label_pages, with_domain
-
-
+from fineweb_domain_analyzer_spark.operators.filtering import (
+    label_by_domain,
+    with_domain,
+)
 from fineweb_domain_analyzer_spark.sources.jsonl import read_jsonl_with_raw
 from fineweb_domain_analyzer_spark.sources.warc import read_warc, read_wet
 
@@ -108,19 +119,43 @@ def warc_to_json(spark, args, wet: bool = False) -> Path:
     return target
 
 
-def extract_domains(spark, args, jsonl_path: str | None = None) -> dict:
+# the only page columns the extract/filter verbs read
+_PAGE_COLS = ("raw", "id", "url", "timestamp")
+
+
+def _read_pages(spark, jsonl_path: str):
+    """The dump's parsed lines, only the verbs' columns, plus ``domain``."""
+    return with_domain(read_jsonl_with_raw(spark, jsonl_path).select(*_PAGE_COLS))
+
+
+@contextmanager
+def _persisted(df):
+    """``df`` persisted for the block, unpersisted on exit."""
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+def extract_domains(
+    spark, args, jsonl_path: str | None = None, pages=None
+) -> dict:
+    """Stage 2: per-domain stats → domains_simple/detailed JSON.
+    ``pages`` is a ``_read_pages`` frame; without it the dump at
+    ``jsonl_path`` (default --input) is read here, persisted so that the
+    domain UDF runs once per row (see the module docstring)."""
+    if pages is None:
+        with _persisted(_read_pages(spark, jsonl_path or args.input)) as pages:
+            return extract_domains(spark, args, pages=pages)
     out_dir = Path(args.output)
     out_dir.mkdir(parents=True, exist_ok=True)
-    pages = read_jsonl_with_raw(spark, jsonl_path or args.input)
-    pages = with_domain(
-        pages.filter(F.col("url").isNotNull() & (F.col("url") != ""))
-    )
-    order = "id" if "id" in pages.columns else "url"
+    pages = pages.filter(F.col("url").isNotNull() & (F.col("url") != ""))
     # per-record timestamps (WARC-derived input) feed first/last_seen
     # exactly like the reference (:184-187); rows without the field get
     # the injected run timestamp (the reference's datetime.now() path)
     stats_df = domain_stats(
-        pages, order_col=order, ts_col="timestamp", run_ts=_iso(args)
+        pages, order_col="id", ts_col="timestamp", run_ts=_iso(args)
     )
     rows = stats_df.orderBy("domain").collect()  # O(domains): small
     ts = _ts(args)
@@ -180,18 +215,28 @@ def check_robots(
             max_workers_per_task=args.max_workers,
             fetcher=fetcher,
         )
+        rows = [r.asDict() for r in policy.collect()]  # O(domains): small
     else:
         contents: dict[str, str] = {}
         if args.robots_content:
             with open(args.robots_content, encoding="utf-8") as f:
                 contents = json.load(f)
-        rows = [(d, contents.get(d), None) for d in domains]
-        df = spark.createDataFrame(
-            rows, "domain string, robots_content string, error string"
-        )
-        policy = policy_from_robots_content(df, user_agent=args.user_agent)
+        # policy_from_robots_content's mapping for a fetch without error,
+        # on the driver: parse_robots_py(None) is the allow-all 404 branch
+        rows = []
+        for d in domains:
+            body = contents.get(d)
+            rows.append(
+                {
+                    "domain": d,
+                    "robots_exists": body is not None,
+                    "error": None,
+                    "robots_content": body,
+                    **parse_robots_py(body, args.user_agent),
+                }
+            )
     results = {}
-    for r in policy.collect():  # O(domains): small
+    for r in rows:
         results[r["domain"]] = {
             "domain": r["domain"],
             "robots_exists": r["robots_exists"],
@@ -228,35 +273,33 @@ def check_robots(
     return results
 
 
-def filter_content(spark, args, robots_results: dict | None = None, jsonl_path=None):
+def filter_content(
+    spark, args, robots_results: dict | None = None, jsonl_path=None, pages=None
+):
+    """Stage 4: keep/drop the dump's lines by robots policy. ``pages``
+    is a ``_read_pages`` frame over ``jsonl_path``; without it the dump
+    is read here."""
+    jsonl_path = jsonl_path or args.input
+    if pages is None:
+        pages = _read_pages(spark, jsonl_path)
     out_dir = Path(args.output)
     out_dir.mkdir(parents=True, exist_ok=True)
-    jsonl_path = jsonl_path or args.input
     if robots_results is None:
         policy = load_policy_fixture(spark, args.robots)
     else:
-        from fineweb_domain_analyzer_spark.schema import DOMAIN_POLICY
-
-        rows = [
-            (
-                d,
-                bool(r.get("robots_exists", False)),
-                bool(r.get("crawl_allowed", False)),
-                r.get("crawl_delay"),
-                r.get("disallowed_paths") or [],
-                r.get("error"),
-                None,
-                r.get("robots_content"),
-            )
-            for d, r in robots_results.items()
-        ]
-        policy = spark.createDataFrame(rows, DOMAIN_POLICY)
+        # join_policy reads only these two columns
+        policy = spark.createDataFrame(
+            [
+                (d, bool(r.get("crawl_allowed", False)))
+                for d, r in robots_results.items()
+            ],
+            "domain string, crawl_allowed boolean",
+        )
     from fineweb_domain_analyzer_spark.sources.jsonl import (
         write_jsonl_passthrough,
     )
 
-    pages = read_jsonl_with_raw(spark, jsonl_path)
-    labeled = label_pages(pages, policy)
+    labeled = label_by_domain(pages, policy)
     ts = _ts(args)
     stem = Path(jsonl_path).stem
     filtered_file = out_dir / f"filtered_{stem}_{ts}.jsonl"
@@ -626,9 +669,15 @@ def main(argv: list[str] | None = None) -> int:
                 jsonl = str(warc_to_json(spark, args))
             else:
                 jsonl = args.input
-            dom_stats = extract_domains(spark, args, jsonl)
-            results = check_robots(spark, args, domains=sorted(dom_stats.keys()))
-            filter_content(spark, args, robots_results=results, jsonl_path=jsonl)
+            with _persisted(_read_pages(spark, jsonl)) as pages:
+                dom_stats = extract_domains(spark, args, pages=pages)
+                results = check_robots(
+                    spark, args, domains=sorted(dom_stats.keys())
+                )
+                filter_content(
+                    spark, args, robots_results=results, jsonl_path=jsonl,
+                    pages=pages,
+                )
         elif args.warc_to_json:
             warc_to_json(spark, args)
         elif args.wet_to_json:

@@ -371,14 +371,13 @@ def sitemaps_from_robots(
     in the file, case-insensitive, independent of User-agent sections —
     so no line-state machine is needed, just a prefix filter.
 
-    All codegen: newline split → case-insensitive prefix filter →
+    All codegen: newline split → case-insensitive directive-regex filter →
     value extract → indexed explode. Zero shuffles, zero UDFs; domains
     without sitemaps simply produce no rows (explode of empty array).
     """
     lines = F.split(F.col(content_col), "\n")
-    sm = F.filter(
-        lines, lambda ln: F.lower(F.ltrim(ln)).startswith("sitemap:")
-    )
+    # one regex both selects and extracts (\s also matches a tab indent)
+    sm = F.filter(lines, lambda ln: ln.rlike(r"(?i)^\s*sitemap:"))
     urls = F.filter(
         F.transform(
             sm,

@@ -160,7 +160,9 @@ def surt_key(url: Column) -> Column:
     ``com,example,sub)/a/b``.  Lexicographic order then co-locates a
     site with all its subdomains — the layout key for site-local
     sorting/sharding of a crawl (port and scheme dropped, host
-    lowercased; query strings ride with the path).
+    lowercased; query strings ride with the path, and the path always
+    starts with ``/``, so ``https://example.com?q=1`` →
+    ``com,example)/?q=1``).
 
     Pure codegen: netloc regex → port strip → split/reverse/join.
     Invalid/scheme-less urls (empty netloc) yield NULL so callers can
@@ -170,7 +172,9 @@ def surt_key(url: Column) -> Column:
     host = F.split(netloc, ":")[0]
     rev = F.array_join(F.reverse(F.split(host, r"\.")), ",")
     raw_path = F.regexp_extract(url, r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^#]*)", 1)
-    path = F.when(raw_path == "", F.lit("/")).otherwise(raw_path)
+    path = F.when(raw_path.startswith("/"), raw_path).otherwise(
+        F.concat(F.lit("/"), raw_path)
+    )
     return F.when(host == "", F.lit(None).cast("string")).otherwise(
         F.concat(rev, F.lit(")"), path)
     )

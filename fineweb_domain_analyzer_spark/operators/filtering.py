@@ -150,9 +150,27 @@ def label_pages(
     robots_disallowed > robots_path_disallowed; the no-url ⇒ keep quirk
     is preserved. Still a single broadcast-join map stage — the path
     check is a codegen ``exists``/``startswith`` over the joined array."""
-    labeled = with_domain(pages, url_col, exact=exact_domain)
+    return label_by_domain(
+        with_domain(pages, url_col, exact=exact_domain),
+        policy,
+        url_col=url_col,
+        broadcast_dim=broadcast_dim,
+        enforce_paths=enforce_paths,
+    )
+
+
+def label_by_domain(
+    pages: DataFrame,
+    policy: DataFrame,
+    url_col: str = "url",
+    broadcast_dim: bool = True,
+    enforce_paths: bool = False,
+) -> DataFrame:
+    """:func:`label_pages` for pages that already carry ``domain``: the
+    policy join plus the keep/drop_reason predicates, without the domain
+    pass (callers that compute ``domain`` once for several consumers)."""
     labeled = join_policy(
-        labeled, policy, broadcast_dim=broadcast_dim, include_paths=enforce_paths
+        pages, policy, broadcast_dim=broadcast_dim, include_paths=enforce_paths
     )
     operands = (sql_ident(url_col), "domain", "_policy_crawl_allowed")
     keep = F.expr(keep_predicate_sql(*operands))

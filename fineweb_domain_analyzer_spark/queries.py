@@ -5480,7 +5480,7 @@ sm AS (
          list_filter(
            list_transform(
              list_filter(string_split(robots_content, chr(10)),
-                         ln -> starts_with(lower(ltrim(ln)), 'sitemap:')),
+                         ln -> regexp_matches(ln, '(?i)^\\s*sitemap:')),
              ln -> trim(regexp_extract(ln, '(?i)^\\s*sitemap:\\s*(\\S+)', 1))),
            u -> u <> '') AS urls
   FROM robots
@@ -5675,7 +5675,8 @@ keys AS (
   SELECT doc_id,
          CASE WHEN host = '' THEN NULL
               ELSE array_to_string(list_reverse(string_split(host, '.')), ',')
-                   || ')' || (CASE WHEN raw_path = '' THEN '/' ELSE raw_path END)
+                   || ')' || (CASE WHEN starts_with(raw_path, '/') THEN raw_path
+                                   ELSE '/' || raw_path END)
          END AS surt
   FROM parts
 )

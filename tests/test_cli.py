@@ -372,3 +372,138 @@ def test_cli_drop_page_types_typo_fails_loudly(spark, tmp_path):
     ]
     with _pytest.raises(SystemExit, match="unknown page type"):
         cli.main(argv)
+
+
+def _robots_bodies(fixtures_dir, path) -> Path:
+    """The frozen snapshot as a --robots-content map: its bodies, and
+    ``Disallow: /`` for the domains it denies."""
+    ref = json.load(open(fixtures_dir / "robots_check_20250724_133214.json"))
+    bodies = {
+        d: r["robots_content"]
+        if r["crawl_allowed"]
+        else "User-agent: *\nDisallow: /"
+        for d, r in ref["results"].items()
+        if "robots_content" in r or not r["crawl_allowed"]
+    }
+    path.write_text(json.dumps(bodies), encoding="utf-8")
+    return path
+
+
+def _domain_udf_nodes(df) -> int:
+    """ArrowEvalPython nodes evaluating extract_domain_udf in ``df``'s
+    physical plan (formatted explain: one section per plan node)."""
+    import re
+
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    return sum(
+        "extract_domain_udf" in section
+        for section in re.split(r"\n(?=\(\d+\) )", plan)
+        if re.match(r"\(\d+\) ArrowEvalPython", section)
+    )
+
+
+def _capture_domain_stats(monkeypatch) -> list:
+    """Patch the CLI's domain_stats to record the UDF node count of
+    each frame it builds (while the verb's inputs are still persisted)."""
+    nodes = []
+
+    def capture(*a, **kw):
+        df = cli_domain_stats(*a, **kw)
+        nodes.append(_domain_udf_nodes(df))
+        return df
+
+    cli_domain_stats = cli.domain_stats
+    monkeypatch.setattr(cli, "domain_stats", capture)
+    return nodes
+
+
+def test_extract_domains_evaluates_domain_udf_once(spark, fixtures_dir, tmp_path, monkeypatch):
+    """domain_stats' non-empty-domain filter must not be pushed below
+    the UDF's projection: one ArrowEvalPython evaluates the UDF."""
+    nodes = _capture_domain_stats(monkeypatch)
+    args = _args(input=str(fixtures_dir / "test_data.jsonl"), output=str(tmp_path))
+    cli.extract_domains(spark, args)
+    assert nodes == [1]
+
+
+def test_all_steps_matches_separate_verbs(spark, fixtures_dir, tmp_path, monkeypatch):
+    """--all-steps (one parse, one domain pass, driver-side robots
+    parse) writes the same artifacts as the three verbs run one by one,
+    and leaves no persisted data behind."""
+    bodies = _robots_bodies(fixtures_dir, tmp_path / "bodies.json")
+    data = str(fixtures_dir / "test_data.jsonl")
+    common = ["--robots-content", str(bodies), "--run-ts", "20250724_133214",
+              "--run-iso", "2025-07-24T13:32:14"]
+    one, sep = tmp_path / "one", tmp_path / "sep"
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    nodes = _capture_domain_stats(monkeypatch)
+    assert cli.main(["--input", data, "--all-steps", "--output", str(one), *common]) == 0
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    assert nodes == [1]
+
+    assert cli.main(["--input", data, "--extract-domains", "--output", str(sep), *common]) == 0
+    domains = sep / "domains_simple_20250724_133214.json"
+    assert cli.main(["--domains", str(domains), "--check-robots", "--output", str(sep), *common]) == 0
+    robots = sep / "robots_check_20250724_133214.json"
+    assert cli.main(["--input", data, "--robots", str(robots), "--filter-content",
+                     "--output", str(sep), *common]) == 0
+
+    names = sorted(p.name for p in one.iterdir())
+    assert names == sorted(p.name for p in sep.iterdir())
+    assert len(names) == 6
+    for name in names:
+        a, b = ((d / name).read_text(encoding="utf-8") for d in (one, sep))
+        if name.startswith("filter_stats_"):
+            # the stats name the artifacts by path
+            a = a.replace(str(one), str(sep))
+        assert a == b, name
+    stats = json.loads((one / "filter_stats_20250724_133214.json").read_text())
+    assert stats["statistics"] == {
+        "total_processed": 50,
+        "filtered_kept": 34,
+        "excluded_count": 16,
+        "keep_ratio": 68.0,
+    }
+
+
+def test_offline_check_robots_matches_policy_udf(spark, tmp_path):
+    """The driver-side offline parse gives policy_from_robots_content's
+    fields on the parser's truth table."""
+    from fineweb_domain_analyzer_spark.functions.robots import (
+        policy_from_robots_content,
+    )
+
+    bodies = {
+        "null.com": None,
+        "deny.com": "User-agent: *\nDisallow: /",
+        "paths.com": "User-agent: *\nDisallow: /private\nCrawl-delay: 3",
+        "baddelay.com": "User-agent: *\nCrawl-delay: soon",
+        "otherua.com": "User-agent: googlebot\nDisallow: /",
+        "empty.com": "",
+    }
+    domains = [*bodies, "absent.com"]
+    (tmp_path / "bodies.json").write_text(json.dumps(bodies))
+    (tmp_path / "domains.json").write_text(json.dumps({"domains": domains}))
+    args = _args(
+        domains=str(tmp_path / "domains.json"),
+        robots_content=str(tmp_path / "bodies.json"),
+        output=str(tmp_path),
+    )
+    results = cli.check_robots(spark, args)
+    df = spark.createDataFrame(
+        [(d, bodies.get(d), None) for d in domains],
+        "domain string, robots_content string, error string",
+    )
+    fields = ["robots_exists", "crawl_allowed", "crawl_delay", "disallowed_paths", "error"]
+    expected = {
+        r["domain"]: {f: r[f] for f in fields}
+        for r in policy_from_robots_content(df).collect()
+    }
+    assert {d: {f: r[f] for f in fields} for d, r in results.items()} == expected
+    assert results["deny.com"]["crawl_allowed"] is False
+    assert results["baddelay.com"]["crawl_delay"] is None
+    assert results["otherua.com"]["crawl_allowed"] is True
+    assert "robots_content" not in results["null.com"]
+    assert results["empty.com"]["robots_content"] == ""

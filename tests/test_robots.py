@@ -252,6 +252,8 @@ class TestSitemaps:
                 ("d.com", None),
                 # directive with no value → dropped
                 ("e.com", "Sitemap:   "),
+                # tab-indented directive: the extraction regex's \s
+                ("f.com", "User-agent: *\n\tSitemap: https://f.com/t.xml"),
             ],
             "domain string, robots_content string",
         )
@@ -261,6 +263,7 @@ class TestSitemaps:
             ("a.com", "https://a.com/s.xml", 0),
             ("b.com", "https://b.com/1.xml", 0),
             ("b.com", "https://b.com/2.xml", 1),
+            ("f.com", "https://f.com/t.xml", 0),
         ]
 
     def test_zero_exchanges(self, spark):

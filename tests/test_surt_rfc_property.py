@@ -37,8 +37,8 @@ def surt_py(url: str | None) -> str | None:
         return None
     rest = url[m.end() :]
     path = rest.split("#")[0]
-    if path == "":
-        path = "/"
+    if not path.startswith("/"):
+        path = "/" + path
     return ",".join(reversed(host.split("."))) + ")" + path
 
 
@@ -68,7 +68,11 @@ url_strategy = st.one_of(
         st.sampled_from(["", "?q=1", "?a=b&c=d"]),
         st.sampled_from(["", "#frag", "#x/y"]),
     ),
-    st.builds(lambda h: f"http://{h}", host),
+    st.builds(
+        lambda h, q: f"http://{h}{q}",
+        host,
+        st.sampled_from(["", "?q=1", "#frag", "?a=b#f"]),
+    ),
     st.sampled_from(["", "not-a-url", "ftp://x.y/z", "https:///nohost"]),
 )
 

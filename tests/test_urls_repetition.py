@@ -264,6 +264,9 @@ class TestSurtKey:
             ("http://WWW.Example.COM", "com,example,www)/"),
             ("https://example.com/x#frag", "com,example)/x"),
             ("https://localhost/p", "localhost)/p"),
+            # a query without a path still gets the root path's '/'
+            ("https://example.com?q=1", "com,example)/?q=1"),
+            ("https://Example.com:8080?a=b#f", "com,example)/?a=b"),
             ("not-a-url", None),
             ("", None),
             (None, None),
