@@ -34,6 +34,14 @@ domain UDF once per document: the parsed, domain-labeled pages
 the keep/drop filter. The persisted frame is also a fence: without it
 Catalyst pushes domain_stats' non-empty-domain filter below the UDF's
 projection and evaluates the UDF twice per row.
+
+The verbs also avoid Spark jobs that carry no work: the domain rows
+(one per domain) are sorted on the driver after an Arrow collect, not by
+a global ``orderBy`` (a range-partition sample job and a second
+shuffle), and --filter-content's ``(domain, crawl_allowed)`` policy
+dimension, from check_robots' results or the --robots snapshot, is built
+from an Arrow table: a ``LocalRelation``, which Spark broadcasts without
+the collect job an RDD-backed frame needs.
 """
 
 from __future__ import annotations
@@ -157,7 +165,10 @@ def extract_domains(
     stats_df = domain_stats(
         pages, order_col="id", ts_col="timestamp", run_ts=_iso(args)
     )
-    rows = stats_df.orderBy("domain").collect()  # O(domains): small
+    # O(domains): small. Sorted here, not by orderBy: a global sort
+    # costs a range-partition sample job and a second shuffle. Python's
+    # code-point order is Spark's UTF-8 byte order.
+    rows = sorted(stats_df.toArrow().to_pylist(), key=lambda r: r["domain"])
     ts = _ts(args)
     simple = {
         "metadata": {
@@ -176,7 +187,7 @@ def extract_domains(
         "domains": {
             r["domain"]: {
                 "count": r["count"],
-                "urls": list(r["urls"]),
+                "urls": r["urls"],
                 "tld": r["tld"],
                 "first_seen": r["first_seen"],
                 "last_seen": r["last_seen"],
@@ -273,33 +284,46 @@ def check_robots(
     return results
 
 
+def _policy_dim(spark, robots_results: dict):
+    """The ``(domain, crawl_allowed)`` columns ``join_policy`` reads, from
+    robots-check results. Built from an Arrow table, the frame is a
+    ``LocalRelation``: broadcasting it runs no Spark job, where a frame
+    from a list of tuples is RDD-backed and costs a collect job."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "domain": pa.array(list(robots_results), pa.string()),
+                "crawl_allowed": pa.array(
+                    [bool(r.get("crawl_allowed", False)) for r in robots_results.values()],
+                    pa.bool_(),
+                ),
+            }
+        )
+    )
+
+
 def filter_content(
     spark, args, robots_results: dict | None = None, jsonl_path=None, pages=None
 ):
     """Stage 4: keep/drop the dump's lines by robots policy. ``pages``
     is a ``_read_pages`` frame over ``jsonl_path``; without it the dump
-    is read here."""
+    is read here. ``robots_results`` defaults to the ``results`` of the
+    --robots snapshot."""
     jsonl_path = jsonl_path or args.input
     if pages is None:
         pages = _read_pages(spark, jsonl_path)
     out_dir = Path(args.output)
     out_dir.mkdir(parents=True, exist_ok=True)
     if robots_results is None:
-        policy = load_policy_fixture(spark, args.robots)
-    else:
-        # join_policy reads only these two columns
-        policy = spark.createDataFrame(
-            [
-                (d, bool(r.get("crawl_allowed", False)))
-                for d, r in robots_results.items()
-            ],
-            "domain string, crawl_allowed boolean",
-        )
+        with open(args.robots, encoding="utf-8") as f:
+            robots_results = json.load(f)["results"]
     from fineweb_domain_analyzer_spark.sources.jsonl import (
         write_jsonl_passthrough,
     )
 
-    labeled = label_by_domain(pages, policy)
+    labeled = label_by_domain(pages, _policy_dim(spark, robots_results))
     ts = _ts(args)
     stem = Path(jsonl_path).stem
     filtered_file = out_dir / f"filtered_{stem}_{ts}.jsonl"

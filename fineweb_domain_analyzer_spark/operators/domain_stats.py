@@ -13,16 +13,20 @@ combine. Two divergences, both deliberate and documented:
   runs are reproducible.
 
 Scale note: ``groupBy(domain)`` is the engine's one unavoidable
-shuffle. Both variants bound per-key memory with a ``row_number ≤ 5``
-window before any collect (the per-domain sort spills via Tungsten's
-external sorter; aggregation buffers hold ≤ 5 rows). Head domains are
-Zipf-heavy at CC scale, so the skew-safe variant
-(``domain_stats_salted``) additionally defuses single-task wall-clock
-skew with a two-phase salted aggregation: partial per (domain, salt),
-final per domain. count/min/max compose exactly; the top-5 url list
-composes because each partial keeps its 5 smallest (order_col)
-candidates — the global top-5 is a subset of the union of per-salt
-top-5s.
+shuffle. Both variants bound per-key memory with a ``row_number``
+window: the per-domain sort spills via Tungsten's external sorter, and
+the url collect keeps only rows ranked ≤ 5, so no aggregation buffer
+holds more than 5 candidates per key. Head domains are Zipf-heavy at
+CC scale, so the skew-safe variant (``domain_stats_salted``)
+additionally defuses single-task wall-clock skew with a two-phase
+salted aggregation: partial per (domain, salt), final per domain.
+count/min/max compose exactly; the top-5 url list composes because
+each partial keeps its 5 smallest (order_col) candidates — the global
+top-5 is a subset of the union of per-salt top-5s.
+
+Both plans are built from SQL text (``functions/sqltext.py``): one
+``selectExpr`` and one ``agg`` instead of a tree of Column objects,
+each node of which costs a driver↔JVM round trip.
 """
 
 from __future__ import annotations
@@ -31,6 +35,56 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fineweb_domain_analyzer_spark.functions.domains import extract_tld_sql
+from fineweb_domain_analyzer_spark.functions.sqltext import sql_ident, sql_lit
+
+_OUT_COLS = ("domain", "count", "urls", "tld", "first_seen", "last_seen")
+
+
+def _ranked(
+    pages: DataFrame,
+    domain_col: str,
+    url_col: str,
+    order_col: str | None,
+    ts_col: str | None,
+    run_ts: str | None,
+    salts: int | None = None,
+) -> tuple[DataFrame, str]:
+    """Rows with a non-empty domain as (domain, [_salt], _seen_ts, _rn,
+    order_col, url_col): ``_rn`` ranks each row by (order_col, url_col)
+    within its domain — within its (domain, _salt) with ``salts``. Also
+    returns the SQL aggregate that collects a group's (ord, url)
+    structs ranked ≤ 5. The struct's order field gets its own name:
+    with the default order_col == url_col a bare struct would carry two
+    ``url`` fields."""
+    dom, url = sql_ident(domain_col), sql_ident(url_col)
+    order = sql_ident(order_col or url_col)
+    fallback = sql_lit(run_ts) if run_ts else "CAST(NULL AS STRING)"
+    if ts_col is None:
+        seen_ts = fallback
+    else:
+        # falsy check, not just null: the reference does
+        # `record.get('timestamp') or now()` (fineweb_analyzer.py), so an
+        # empty-string timestamp must also fall back to run_ts
+        s = f"CAST({sql_ident(ts_col)} AS STRING)"
+        seen_ts = f"coalesce(CASE WHEN {s} != '' THEN {s} END, {fallback})"
+    df = pages.where(f"{dom} IS NOT NULL AND {dom} != ''")
+    keys, cols = dom, [f"{dom} AS domain"]
+    if salts is not None:
+        # a column of its own, so the window's exchange on (domain,
+        # _salt) also serves the per-salt groupBy
+        df = df.selectExpr("*", f"pmod(xxhash64({url}), {sql_lit(salts)}) AS _salt")
+        keys += ", _salt"
+        cols.append("_salt")
+    ranked = df.selectExpr(
+        *cols,
+        f"{seen_ts} AS _seen_ts",
+        f"row_number() OVER (PARTITION BY {keys} ORDER BY {order}, {url}) AS _rn",
+        # unaliased: an alias here would be computed below the window
+        # and ship one more copy of the column through the shuffle
+        *dict.fromkeys((order, url)),
+    )
+    top5 = f"collect_list(CASE WHEN _rn <= 5 THEN struct({order} AS ord, {url} AS url) END)"
+    return ranked, top5
 
 
 def domain_stats(
@@ -45,63 +99,25 @@ def domain_stats(
     last_seen). Rows with null/empty domain are excluded, mirroring the
     reference's ``if url:`` / ``if domain:`` guards (lines 172-174).
 
-    Bounded state by construction: the deterministic smallest-5 urls
-    come from a ``row_number ≤ 5`` window filter, so Tungsten's
-    external sorter (spillable) does the per-domain ordering and every
-    aggregation buffer afterwards holds at most 5 rows per domain — a
-    Zipf head domain costs disk, never an OOM. count/first/last ride
-    the same window partitioning, and the follow-up groupBy reuses the
-    window's hash exchange, so the whole operator is still ONE shuffle.
-    For 45%+ hot keys where even the spill-sort wall-time matters, use
-    ``domain_stats_salted``.
-
-    The struct's order field gets its own alias — with the default
-    order_col == url_col a bare struct would carry two `url` fields and
-    the s["url"] projection becomes an ambiguous reference.
+    Bounded state by construction: ONE ``row_number`` window ranks each
+    domain's rows by (order_col, url_col) — Tungsten's external sorter
+    (spillable) does the per-domain ordering — and ONE groupBy then
+    takes count/min/max over every row while its url collect keeps only
+    the rows ranked ≤ 5, so every aggregation buffer holds at most 5
+    candidates per domain: a Zipf head domain costs disk, never an OOM.
+    The groupBy reuses the window's hash exchange, so the whole operator
+    is still ONE shuffle. For 45%+ hot keys where even the spill-sort
+    wall-time matters, use ``domain_stats_salted``.
     """
-    from pyspark.sql.window import Window
-
-    df = pages.filter(
-        F.col(domain_col).isNotNull() & (F.col(domain_col) != "")
-    )
-    order_col = order_col or url_col
-    if ts_col is None:
-        ts_expr = F.lit(run_ts) if run_ts else F.lit(None).cast("string")
-    else:
-        # falsy check, not just null: the reference does
-        # `record.get('timestamp') or now()` (fineweb_analyzer.py), so an
-        # empty-string timestamp must also fall back to run_ts
-        s = F.col(ts_col).cast("string")
-        ts_expr = F.coalesce(F.when(s != "", s), F.lit(run_ts))
-    df = df.withColumn("_seen_ts", ts_expr)
-    w_ord = Window.partitionBy(domain_col).orderBy(
-        F.col(order_col), F.col(url_col)
-    )
-    w_all = Window.partitionBy(domain_col)
-    ranked = (
-        df.withColumn("_rn", F.row_number().over(w_ord))
-        .withColumn("_cnt", F.count(F.lit(1)).over(w_all))
-        .withColumn("_first", F.min("_seen_ts").over(w_all))
-        .withColumn("_last", F.max("_seen_ts").over(w_all))
-        .filter(F.col("_rn") <= 5)
-    )
-    agg = ranked.groupBy(F.col(domain_col).alias("domain")).agg(
-        F.first("_cnt").alias("count"),
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col(order_col).alias("ord"), F.col(url_col).alias("url")
-                    )
-                )
-            ),
-            lambda s: s["url"],
-        ).alias("urls"),
-        F.first("_first").alias("first_seen"),
-        F.first("_last").alias("last_seen"),
+    ranked, top5 = _ranked(pages, domain_col, url_col, order_col, ts_col, run_ts)
+    agg = ranked.groupBy("domain").agg(
+        F.expr("count(1) AS count"),
+        F.expr(f"transform(array_sort({top5}), s -> s.url) AS urls"),
+        F.expr("min(_seen_ts) AS first_seen"),
+        F.expr("max(_seen_ts) AS last_seen"),
     )
     return agg.withColumn("tld", extract_tld_sql(F.col("domain"))).select(
-        "domain", "count", "urls", "tld", "first_seen", "last_seen"
+        *_OUT_COLS
     )
 
 
@@ -123,65 +139,29 @@ def domain_stats_salted(
     ``row_number`` over (domain, salt) — Tungsten's external sorter
     spills to disk, unlike a collect_list aggregation buffer which must
     hold every url of the hottest key in memory — and every collect
-    after the rn ≤ 5 filter carries at most 5 rows per salt."""
-    from pyspark.sql.window import Window
-
-    order_col = order_col or url_col
-    df = pages.filter(
-        F.col(domain_col).isNotNull() & (F.col(domain_col) != "")
-    )
-    if ts_col is None:
-        ts_expr = F.lit(run_ts) if run_ts else F.lit(None).cast("string")
-    else:
-        # falsy check, not just null: the reference does
-        # `record.get('timestamp') or now()` (fineweb_analyzer.py), so an
-        # empty-string timestamp must also fall back to run_ts
-        s = F.col(ts_col).cast("string")
-        ts_expr = F.coalesce(F.when(s != "", s), F.lit(run_ts))
-    df = df.withColumn("_seen_ts", ts_expr).withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_salts))
-    )
-    w_ord = Window.partitionBy(domain_col, "_salt").orderBy(
-        F.col(order_col), F.col(url_col)
-    )
-    w_all = Window.partitionBy(domain_col, "_salt")
-    ranked = (
-        df.withColumn("_rn", F.row_number().over(w_ord))
-        .withColumn("_pcnt", F.count(F.lit(1)).over(w_all))
-        .withColumn("_pfirst", F.min("_seen_ts").over(w_all))
-        .withColumn("_plast", F.max("_seen_ts").over(w_all))
-        .filter(F.col("_rn") <= 5)
+    keeps at most 5 rows per salt."""
+    ranked, top5 = _ranked(
+        pages, domain_col, url_col, order_col, ts_col, run_ts, salts=n_salts
     )
     # already hash-partitioned by (domain, salt) from the window — this
     # groupBy adds no exchange; collects are capped at 5 rows per group
-    partial = ranked.groupBy(F.col(domain_col).alias("domain"), F.col("_salt")).agg(
-        F.first("_pcnt").alias("_cnt"),
-        F.slice(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col(order_col).alias("ord"), F.col(url_col).alias("url"))
-                )
-            ),
-            1,
-            5,
-        ).alias("_cand"),
-        F.first("_pfirst").alias("_first"),
-        F.first("_plast").alias("_last"),
+    partial = ranked.groupBy("domain", "_salt").agg(
+        F.expr("count(1) AS _cnt"),
+        F.expr(f"{top5} AS _cand"),
+        F.expr("min(_seen_ts) AS _first"),
+        F.expr("max(_seen_ts) AS _last"),
     )
     final = partial.groupBy("domain").agg(
-        F.sum("_cnt").alias("count"),
-        F.slice(
-            F.transform(
-                F.array_sort(F.flatten(F.collect_list("_cand"))), lambda s: s["url"]
-            ),
-            1,
-            5,
-        ).alias("urls"),
-        F.min("_first").alias("first_seen"),
-        F.max("_last").alias("last_seen"),
+        F.expr("sum(_cnt) AS count"),
+        F.expr(
+            "slice(transform(array_sort(flatten(collect_list(_cand))),"
+            " s -> s.url), 1, 5) AS urls"
+        ),
+        F.expr("min(_first) AS first_seen"),
+        F.expr("max(_last) AS last_seen"),
     )
     return final.withColumn("tld", extract_tld_sql(F.col("domain"))).select(
-        "domain", "count", "urls", "tld", "first_seen", "last_seen"
+        *_OUT_COLS
     )
 
 

@@ -5755,9 +5755,10 @@ FROM ruled
 def q114_best_of_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXTENSION — quality-priority duplicate selection
     (operators/dedup.py:select_cluster_representatives): every third
-    doc gets a degraded near-copy planted (spam tail, id+100000), the
-    cluster key recovers the pairing, and the representative is chosen
-    by quality score (desc, doc_id tiebreak) — the 60-token repeated
+    doc gets a degraded near-copy planted (spam tail, its id offset by
+    max(doc_id) + 1 so no copy takes an original's id), both carry the
+    original's doc_id as their cluster key, and the representative is
+    chosen by quality score (desc, doc_id tiebreak) — the 60-token repeated
     tail drives max_word_repeat_ratio high enough that the repetition
     penalty always outweighs the word-count gain, so the original must
     win every 2-member cluster (asserted in tests). ONE cluster-key
@@ -5771,16 +5772,18 @@ def q114_best_of_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    offset = docs.select(F.max("doc_id") + 1).scalar()
     degraded = docs.filter(F.col("doc_id") % 3 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
+        (F.col("doc_id") + offset).alias("doc_id"),
         F.concat(
             F.col("text"), F.lit(" spam" * 60)
         ).alias("text"),
+        F.col("doc_id").alias("cluster"),
     )
-    u = docs.unionAll(degraded)
+    u = docs.withColumn("cluster", F.col("doc_id")).unionAll(degraded)
     scored = with_quality_score(with_quality_features(u))
     reps = select_cluster_representatives(
-        scored.withColumn("cluster", F.col("doc_id") % 100000),
+        scored,
         "cluster",
         [F.col("quality_score").desc(), F.col("doc_id")],
     )
@@ -5796,13 +5799,15 @@ def _q114_sql() -> str:
     wc = f"CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len({TOKS_SQL}) END"
     return f"""
 WITH u AS (
-  SELECT doc_id, text FROM documents
+  SELECT doc_id, text, doc_id AS cluster FROM documents
   UNION ALL
-  SELECT doc_id + 100000, text || ' spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam'
+  SELECT doc_id + (SELECT max(doc_id) + 1 FROM documents),
+         text || ' spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam spam',
+         doc_id
   FROM documents WHERE doc_id % 3 = 0
 ),
 feats AS (
-  SELECT doc_id, doc_id % 100000 AS cluster,
+  SELECT doc_id, cluster,
          {wc} AS word_count,
          round(length(regexp_replace(trim(text), '\\s+', '', 'g'))::DOUBLE
                / greatest({wc}, 1), 4) AS mean_word_len,

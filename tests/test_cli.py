@@ -507,3 +507,77 @@ def test_offline_check_robots_matches_policy_udf(spark, tmp_path):
     assert results["otherua.com"]["crawl_allowed"] is True
     assert "robots_content" not in results["null.com"]
     assert results["empty.com"]["robots_content"] == ""
+
+
+def _executed_plans(spark, description: str) -> list[str]:
+    """Physical plans of the SQL executions run under ``description``."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [
+        execs.apply(i).physicalPlanDescription()
+        for i in range(execs.size())
+        if execs.apply(i).description() == description
+    ]
+
+
+def test_verbs_run_no_fixed_cost_jobs(spark, fixtures_dir, tmp_path, monkeypatch):
+    """The filter's policy dim is a LocalRelation, whether it comes from
+    --robots or from check_robots' results (an RDD-backed dim costs a
+    collect job to broadcast), and extract_domains sorts its rows on the
+    driver (no range-partition sample job, no second shuffle)."""
+    dims = []
+
+    def capture(pages, policy, *a, **kw):
+        dims.append(policy._jdf.queryExecution().analyzed().nodeName())
+        return cli_label_by_domain(pages, policy, *a, **kw)
+
+    cli_label_by_domain = cli.label_by_domain
+    monkeypatch.setattr(cli, "label_by_domain", capture)
+    robots = fixtures_dir / "robots_check_20250724_133214.json"
+    args = _args(
+        input=str(fixtures_dir / "test_data.jsonl"),
+        robots=str(robots),
+        output=str(tmp_path),
+    )
+    cli.filter_content(spark, args)
+    results = json.loads(robots.read_text(encoding="utf-8"))["results"]
+    cli.filter_content(spark, args, robots_results=results)
+    assert dims == ["LocalRelation", "LocalRelation"]
+
+    description = f"extract_domains/{tmp_path.name}"
+    spark.sparkContext.setJobDescription(description)
+    try:
+        cli.extract_domains(spark, args)
+    finally:
+        spark.sparkContext.setJobDescription(None)
+    plans = _executed_plans(spark, description)
+    assert plans
+    assert not any("rangepartitioning" in p.lower() for p in plans)
+
+
+def test_extract_domains_orders_non_ascii_domains_like_spark(spark, tmp_path):
+    """The driver-side sort gives the domain order orderBy("domain")
+    gives: UTF-8 byte order, so a fullwidth ``ｚ`` (U+FF5A) sorts before
+    an astral ``𝔘`` (U+1D518) although its UTF-16 code unit is larger."""
+    hosts = ["z.com", "𝔘.org", "ä.de", "ｚ.com", "é.com", "a.com"]
+    data = tmp_path / "idn.jsonl"
+    data.write_text(
+        "".join(
+            json.dumps({"id": f"idn_{i}", "url": f"https://{h}/p", "text": "x"},
+                       ensure_ascii=False) + "\n"
+            for i, h in enumerate(hosts)
+        ),
+        encoding="utf-8",
+    )
+    cli.extract_domains(spark, _args(input=str(data), output=str(tmp_path)))
+    spark_order = [
+        r["domain"]
+        for r in spark.createDataFrame([(h,) for h in hosts], "domain string")
+        .orderBy("domain")
+        .collect()
+    ]
+    assert spark_order == ["a.com", "z.com", "ä.de", "é.com", "ｚ.com", "𝔘.org"]
+    ts = "20250724_133214"
+    simple = json.loads((tmp_path / f"domains_simple_{ts}.json").read_text(encoding="utf-8"))
+    detailed = json.loads((tmp_path / f"domains_detailed_{ts}.json").read_text(encoding="utf-8"))
+    assert simple["domains"] == spark_order
+    assert list(detailed["domains"]) == spark_order

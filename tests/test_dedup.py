@@ -786,3 +786,28 @@ class TestClusterRepresentatives:
         two = [r for r in reps if r["n_members"] == 2]
         assert len(two) > 100
         assert all(r["rep_id"] < 100000 for r in two)
+
+    def test_q114_ids_past_100000_keep_their_clusters(self, spark, tmp_path):
+        """Copies take ids past the corpus' largest and carry their
+        original's cluster: originals 3 and 100003 stay apart even though
+        3 + 100000 = 100003. Spark and the DuckDB oracle agree."""
+        import duckdb
+
+        from fineweb_domain_analyzer_spark import queries as q
+
+        ids = (3, 100002, 100003)
+        spark.createDataFrame(
+            [(i, f"{BASE} number {i}") for i in ids], "doc_id bigint, text string"
+        ).coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
+        got = sorted(
+            (r["cluster"], r["rep_id"], r["n_members"])
+            for r in q.q114_best_of_cluster(spark, str(tmp_path)).collect()
+        )
+        assert got == [(3, 3, 2), (100002, 100002, 2), (100003, 100003, 1)]
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{tmp_path}/documents.parquet/*.parquet')"
+        )
+        want = sorted((c, r, n) for c, r, _s, n in con.execute(q._q114_sql()).fetchall())
+        assert want == got

@@ -191,3 +191,50 @@ class TestDomainSignatureTerms:
         )
         want = sorted(tuple(t) for t in con.execute(q.Q95_SQL).fetchall())
         assert got == want
+
+
+def test_ties_and_null_ids_match_python_oracle(spark):
+    """Rows tied on ``id`` break on ``url``; null ids rank first; exact
+    duplicates count twice. domain_stats and domain_stats_salted both
+    equal a pure-Python oracle of the reference's per-domain record."""
+    rows = [
+        ("a.com", "2", "https://a.com/b", "2024-01-02"),
+        ("a.com", "2", "https://a.com/a", ""),
+        ("a.com", None, "https://a.com/z", "2024-01-05"),
+        ("a.com", None, "https://a.com/y", None),
+        ("a.com", "1", "https://a.com/c", "2024-01-01"),
+        ("a.com", "1", "https://a.com/c", "2024-01-03"),
+        ("a.com", "3", "https://a.com/0", "2024-01-04"),
+        ("b", None, "https://b/x", None),
+        ("c.org", "9", "https://c.org/x", "2023-12-31"),
+        ("", "1", "https://e/", "2024-01-01"),
+        (None, "1", "https://n/", "2024-01-01"),
+    ]
+    run_ts = "2024-06-01"
+
+    def oracle():
+        out = {}
+        for dom in {r[0] for r in rows if r[0]}:
+            mine = [r for r in rows if r[0] == dom]
+            ranked = sorted(mine, key=lambda r: (r[1] is not None, r[1] or "", r[2]))
+            seen = [r[3] or run_ts for r in mine]
+            out[dom] = {
+                "count": len(mine),
+                "urls": [r[2] for r in ranked[:5]],
+                "tld": dom.rsplit(".", 1)[-1] if "." in dom else "",
+                "first_seen": min(seen),
+                "last_seen": max(seen),
+            }
+        return out
+
+    df = spark.createDataFrame(rows, "domain string, id string, url string, ts string")
+    kw = dict(order_col="id", ts_col="ts", run_ts=run_ts)
+    want = oracle()
+    assert want["a.com"]["urls"] == [
+        "https://a.com/y", "https://a.com/z", "https://a.com/c",
+        "https://a.com/c", "https://a.com/a",
+    ]
+    for frame in (domain_stats(df, **kw), domain_stats_salted(df, n_salts=4, **kw)):
+        got = {r["domain"]: {k: v for k, v in r.asDict().items() if k != "domain"}
+               for r in frame.collect()}
+        assert got == want
