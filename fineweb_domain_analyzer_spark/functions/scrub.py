@@ -37,8 +37,12 @@ def toxicity_pattern(terms: tuple[str, ...] = DEFAULT_TOXICITY_TERMS) -> str:
 
 def scrub_pii(text: Column) -> Column:
     """email → phone → IPv4, in that order (emails would otherwise be
-    chewed by the phone/IP digit patterns)."""
-    out = F.regexp_replace(text, EMAIL_RE, EMAIL_TOKEN)
+    chewed by the phone/IP digit patterns). The email regex runs only on
+    text holding an ``@``: the pattern needs a literal one, and most
+    documents have none."""
+    out = F.when(
+        F.instr(text, "@") > 0, F.regexp_replace(text, EMAIL_RE, EMAIL_TOKEN)
+    ).otherwise(text)
     out = F.regexp_replace(out, PHONE_RE, PHONE_TOKEN)
     out = F.regexp_replace(out, IPV4_RE, IP_TOKEN)
     return out

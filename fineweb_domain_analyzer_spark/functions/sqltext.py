@@ -51,11 +51,6 @@ def sql_in(expr: str, values) -> str:
     return f"{expr} IN ({', '.join(sql_lit(v) for v in values)})"
 
 
-def sql_array(values) -> str:
-    """``array(v1, v2, ...)`` over literal values."""
-    return f"array({', '.join(sql_lit(v) for v in values)})"
-
-
 class SqlExpr:
     """SQL text that composes with the operators a ``Column`` rule uses
     (``<=``, ``>=``, ``between``, ``&``, ``~``). A rule written once

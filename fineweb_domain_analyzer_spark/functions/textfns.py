@@ -16,7 +16,6 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 from fineweb_domain_analyzer_spark.functions.sqltext import (
-    sql_array,
     sql_ident,
     sql_in,
     sql_lit,
@@ -118,22 +117,20 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
     "es": ("el", "la", "los", "y", "es", "una", "para", "en", "que", "por"),
 }
 
-#: CJK unified ideographs (U+4E00-U+9FFF)
-CJK_CLASS = "[一-鿿]"
+#: runs of CJK unified ideographs (U+4E00-U+9FFF)
+CJK_RUN = "[一-鿿]+"
 
 
 def _cjk_ratio_sql(text: str) -> str:
     """Share of CJK-unified-ideograph chars (the reference fixtures carry
-    a chinese_chars field computed the same way upstream)."""
-    cjk = f"length({text}) - length(regexp_replace({text}, {sql_lit(CJK_CLASS)}, ''))"
+    a chinese_chars field computed the same way upstream). Removing
+    every maximal run removes exactly the CJK chars."""
+    cjk = f"length({text}) - length(regexp_replace({text}, {sql_lit(CJK_RUN)}, ''))"
     return f"({cjk}) / greatest(length({text}), 1)"
 
 
 def _stopword_hits_sql(tokens: str, lang: str) -> str:
-    return (
-        f"size(filter({tokens}, t -> "
-        f"array_contains({sql_array(LANG_STOPWORDS[lang])}, t)))"
-    )
+    return f"size(filter({tokens}, t -> {sql_in('t', LANG_STOPWORDS[lang])}))"
 
 
 def _langid_decision_sql(hits: dict[str, str], cjk_ratio: str) -> str:
@@ -200,9 +197,13 @@ def with_langid(
         f"THEN {1 << (16 * i)}L ELSE 0L END"
         for i, lang in enumerate(langs)
     )
+    # most tokens are not stopwords: one probe of the union skips the
+    # per-language probes for them
+    union = dict.fromkeys(w for lang in langs for w in LANG_STOPWORDS[lang])
     df = df.withColumns({
         "_li_packed": F.expr(
-            f"CASE WHEN {small} THEN aggregate({toks}, 0L, (acc, t) -> acc + {enc}) "
+            f"CASE WHEN {small} THEN aggregate({toks}, 0L, (acc, t) -> "
+            f"CASE WHEN {sql_in('t', union)} THEN acc + {enc} ELSE acc END) "
             "ELSE 0L END"
         )
     })

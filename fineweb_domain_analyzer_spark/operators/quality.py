@@ -27,8 +27,8 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StringType
 
 from fineweb_domain_analyzer_spark.functions.sqltext import (
-    sql_array,
     sql_ident,
+    sql_in,
     sql_lit,
 )
 from fineweb_domain_analyzer_spark.functions.textfns import (
@@ -39,8 +39,8 @@ from fineweb_domain_analyzer_spark.functions.textfns import (
 # --- Gopher/C4-style heuristic features (all JVM-side) ----------------------
 
 STOPWORDS_EN = ("the", "be", "to", "of", "and", "that", "have", "with", "a", "in")
-#: chars that are NOT symbols for symbol_ratio
-SYMBOL_FREE_CLASS = r"[A-Za-z0-9\s]"
+#: maximal runs of the chars that are NOT symbols for symbol_ratio
+SYMBOL_FREE_RUN = r"[A-Za-z0-9\s]+"
 
 
 def with_quality_features(
@@ -57,7 +57,7 @@ def with_quality_features(
                                         token array — no shuffle)
 
     Why staged projections: computing all five features in ONE
-    projection inlines the shared tokenize/sort/zip subtrees once per
+    projection inlines the shared tokenize/sort/run subtrees once per
     feature; the generated Java for that projection took >100 s to
     Janino-compile on the bench (the per-row work itself is trivial).
     Staging shared intermediates as their own columns turns them into
@@ -68,17 +68,19 @@ def with_quality_features(
     (functions/sqltext.py), one Py4J call per column instead of one per
     expression node.
 
-    Expression notes: the run-break sentinel " " can never equal a
-    whitespace-split token (a NUL literal breaks codegen string
-    comparison — results come back null); the slice length uses the
-    real array size, not Integer.MAX_VALUE, so start+length can't
-    overflow int (which makes slice silently return null); run length i
-    = end_i - end_{i-1} via 1-based element_at against the 0-based
-    lambda index; empty text tokenizes to [''] and must not count as a
-    run.
+    Run chain: ``_qf_ix`` holds the 1-based end index of each run in
+    the sorted tokens, where the next token differs or is ``zip_with``'s
+    null padding (tokens are never null, which also makes sort_array's
+    nulls-first order moot); a run's length is its end minus the
+    previous end. No lambda body reads a stage column: a filter on a
+    feature is pushed below these projections with the stages inlined,
+    and a lambda would then recompute (re-sort) an inlined array once
+    per element. Empty text splits to [''], and ``_qf_n`` = 0 keeps it
+    from counting as a run. symbol_ratio strips maximal runs of
+    non-symbol chars, which removes exactly the class chars.
     """
     text = sql_ident(text_col)
-    drop_cols = ["_qf_n", "_qf_st", "_qf_rb", "_qf_ix", "_qf_maxrun"]
+    drop_cols = ["_qf_n", "_qf_st", "_qf_ix", "_qf_maxrun"]
     if lower_tokens_col is None:
         df = df.withColumn("_qf_lw", ws_tokens(F.lower(F.col(text_col))))
         lower_tokens_col = "_qf_lw"
@@ -97,28 +99,25 @@ def with_quality_features(
     stages = [
         {
             "_qf_n": f"CASE WHEN length(trim({text})) = 0 THEN 0 ELSE size({lw}) END",
-            "_qf_st": f"array_sort({lw})",
+            "_qf_st": f"sort_array({lw})",
         },
         {
-            "_qf_rb": "zip_with(_qf_st, slice(concat(_qf_st, array(' ')), 2, "
-            "size(_qf_st)), (a, b) -> CAST(a != b AS INT))",
+            "_qf_ix": "filter(zip_with(sequence(1, size(_qf_st)), zip_with(_qf_st, "
+            "slice(_qf_st, 2, size(_qf_st)), (a, b) -> b IS NULL OR a != b), "
+            "(i, brk) -> IF(brk, i, 0)), i -> i > 0)",
         },
         {
-            "_qf_ix": "filter(transform(_qf_rb, (x, i) -> "
-            "CASE WHEN x = 1 THEN i + 1 ELSE -1 END), v -> v >= 0)",
-        },
-        {
-            "_qf_maxrun": "coalesce(array_max(transform(_qf_ix, (v, i) -> v - "
-            "coalesce(CASE WHEN i > 0 THEN element_at(_qf_ix, i) END, 0))), 0)",
+            "_qf_maxrun": "coalesce(array_max(zip_with(_qf_ix, concat(array(0), _qf_ix), "
+            "(run_end, prev_end) -> run_end - prev_end)), 0)",
         },
         {
             "word_count": "_qf_n",
             "mean_word_len": "round(length(regexp_replace("
             f"trim({text}), {sql_lit(WS_PATTERN)}, '')) / greatest(_qf_n, 1), 4)",
             "symbol_ratio": f"round(length(regexp_replace({text}, "
-            f"{sql_lit(SYMBOL_FREE_CLASS)}, '')) / greatest(length({text}), 1), 4)",
+            f"{sql_lit(SYMBOL_FREE_RUN)}, '')) / greatest(length({text}), 1), 4)",
             "stopword_density": f"round(size(filter({lw}, t -> "
-            f"array_contains({sql_array(STOPWORDS_EN)}, t))) / greatest(_qf_n, 1), 4)",
+            f"{sql_in('t', STOPWORDS_EN)})) / greatest(_qf_n, 1), 4)",
             "max_word_repeat_ratio": "CASE WHEN _qf_n = 0 THEN 0.0D "
             "ELSE round(_qf_maxrun / greatest(_qf_n, 1), 4) END",
         },

@@ -56,6 +56,155 @@ def test_quality_features_empty(spark):
     assert r["max_word_repeat_ratio"] == 0.0
 
 
+# Java regex ``\s`` (Spark's split/regexp_replace): ASCII whitespace
+# only, unlike Python's Unicode ``\s``.
+_JAVA_WS = r"[ \t\n\x0b\f\r]+"
+
+
+def _round4(x: float) -> float:
+    """Spark's round(double, 4): HALF_UP on the double's decimal repr."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+
+
+def _quality_features_py(text: str) -> tuple:
+    """Pure-Python oracle of the five features: Spark ``trim`` strips
+    spaces only, ``split`` keeps leading/trailing empty tokens, lengths
+    count code points."""
+    import re
+    from collections import Counter
+
+    from fineweb_domain_analyzer_spark.operators.quality import STOPWORDS_EN
+
+    trimmed = text.strip(" ")
+    toks = re.split(_JAVA_WS, trimmed.lower())
+    n = 0 if not trimmed else len(toks)
+    d = max(n, 1)
+    symbols = sum(
+        1 for c in text if not (re.fullmatch(_JAVA_WS, c) or re.fullmatch("[A-Za-z0-9]", c))
+    )
+    return (
+        n,
+        _round4(len(re.sub(_JAVA_WS, "", trimmed)) / d),
+        _round4(symbols / max(len(text), 1)),
+        _round4(sum(t in STOPWORDS_EN for t in toks) / d),
+        0.0 if n == 0 else _round4(max(Counter(toks).values()) / d),
+    )
+
+
+def test_quality_features_match_python_oracle(spark):
+    """with_quality_features value by value against the oracle: the
+    run chain's edge rows (empty, whitespace-only, one token, all one
+    token, tied runs, longest run last or first) and the symbol/length
+    regexes over every Java whitespace char, accented letters and a
+    supplementary-plane char, plus seeded random mixes."""
+    import random
+
+    texts = [
+        "", " ", "   ", "\t\x0b\f\r\n", "word", "Word", "the the the the",
+        "b b a a", "a b a b c", "c a b c c b c", "a a b b b", "z y y y x x",
+        " lead and trail ", "\tTab\x0bvt\fff\rcr\nlf end",
+        "café naïve Ünïcode éé", "𝔘 𝔘𝔘 𝔘 x", "$$$ %%% spam spam spam spam",
+        "the\u00a0nbsp is not whitespace", "a-b_c! (d) [e] 1,2,3",
+    ]
+    rng = random.Random(11)
+    pool = ["the", "a", "of", "in", "x", "X", "é", "𝔘", "$", "9", "to", "ab", "!?"]
+    seps = [" ", "  ", "\t", "\x0b", "\f", "\r", "\n", ""]
+    for _ in range(150):
+        k = rng.randint(0, 25)
+        texts.append("".join(rng.choice(pool) + rng.choice(seps) for _ in range(k)))
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    cols = ["word_count", "mean_word_len", "symbol_ratio", "stopword_density",
+            "max_word_repeat_ratio"]
+    for r in with_quality_features(df).select("i", *cols).collect():
+        assert tuple(r[c] for c in cols) == _quality_features_py(texts[r["i"]]), repr(
+            texts[r["i"]]
+        )
+
+
+def test_quality_features_filter_pushdown_stays_linear(spark):
+    """A filter on a feature is pushed below the feature projections
+    with every stage column inlined; no lambda body may then hold the
+    inlined sort (or tokenize), which would rerun once per element."""
+    df = with_quality_features(_one(spark, "a b b")).filter(
+        F.col("max_word_repeat_ratio") < 0.5
+    )
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Filter" in plan and "sort_array" in plan.split("Filter", 1)[1]
+    start = plan.find("lambdafunction(")
+    while start >= 0:
+        depth, end = 0, start
+        for end in range(start + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        body = plan[start:end]
+        assert "sort_array" not in body and "split(" not in body, body
+        start = plan.find("lambdafunction(", start + 1)
+
+
+def test_scrub_all_equals_ungated_chain(spark):
+    """The ``@``-gated email scrub equals the plain four-regex chain,
+    kept here as the reference."""
+    import random
+
+    from fineweb_domain_analyzer_spark.functions.scrub import (
+        EMAIL_RE,
+        IPV4_RE,
+        PHONE_RE,
+        toxicity_pattern,
+    )
+
+    def reference(c):
+        for pat, tok in ((EMAIL_RE, EMAIL_TOKEN), (PHONE_RE, PHONE_TOKEN),
+                         (IPV4_RE, IP_TOKEN), (toxicity_pattern(), TOX_TOKEN)):
+            c = F.regexp_replace(c, pat, tok)
+        return c
+
+    texts = [
+        None, "", "@", "an @ sign but no mail", "@handle and x@y", "a@b.c",
+        "mail a.b@example.com(860) 649-7922", "u@host.org 10.0.0.1 badword1",
+        "x@y.io860-649-7922 1.2.3.4", "no at sign: 860-649-7922 10.9.8.7",
+        "plain prose with no identifiers", "é@ü.de 𝔘 @@ a@@b.com",
+    ]
+    rng = random.Random(5)
+    parts = ["word", "@", "a.b@ex.com", "(860) 649-7922", "10.0.0.1", "badword1",
+             "x@", "@y.org", "12", " "]
+    for _ in range(200):
+        texts.append(" ".join(rng.choices(parts, k=rng.randint(0, 12))))
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    diff = df.filter(~scrub_all(F.col("text")).eqNullSafe(reference(F.col("text"))))
+    assert diff.collect() == []
+    hits = df.filter(scrub_all(F.col("text")).contains(EMAIL_TOKEN)).count()
+    assert hits > 0
+
+
+def test_with_langid_equals_langid_heuristic(spark):
+    """The staged packed-count langid (with its stopword-union
+    pre-check) against the single-expression per-language form on
+    seeded stopword mixes, shared words (la/que/en) included."""
+    import random
+
+    from fineweb_domain_analyzer_spark.functions.textfns import (
+        LANG_STOPWORDS,
+        with_langid,
+    )
+
+    words = sorted({w for ws in LANG_STOPWORDS.values() for w in ws})
+    words += ["la", "que", "en", "zzz", "Der", "THE", "中文", "x"]
+    rng = random.Random(3)
+    texts = ["", "   ", "la que en", "la la que que", "這是一段中文文本 裡面有很多漢字 the la"]
+    for _ in range(300):
+        texts.append(" ".join(rng.choices(words, k=rng.randint(1, 30))))
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    rows = with_langid(df).withColumn("want", langid_heuristic("text")).collect()
+    assert all(r["langid"] == r["want"] for r in rows), [
+        (r["text"], r["langid"], r["want"]) for r in rows if r["langid"] != r["want"]
+    ]
+    assert {r["langid"] for r in rows} == {"en", "de", "fr", "es", "zh", "unk"}
+
+
 def test_gopher_keep(spark):
     good = "word " * 60 + "the of and to in is it that for with"
     df = with_quality_features(
