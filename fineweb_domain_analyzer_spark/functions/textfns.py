@@ -117,15 +117,14 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
     "es": ("el", "la", "los", "y", "es", "una", "para", "en", "que", "por"),
 }
 
-#: runs of CJK unified ideographs (U+4E00-U+9FFF)
-CJK_RUN = "[一-鿿]+"
+#: CJK unified ideographs (U+4E00-U+9FFF)
+CJK_CLASS = "[一-鿿]"
 
 
 def _cjk_ratio_sql(text: str) -> str:
     """Share of CJK-unified-ideograph chars (the reference fixtures carry
-    a chinese_chars field computed the same way upstream). Removing
-    every maximal run removes exactly the CJK chars."""
-    cjk = f"length({text}) - length(regexp_replace({text}, {sql_lit(CJK_RUN)}, ''))"
+    a chinese_chars field computed the same way upstream)."""
+    cjk = f"length({text}) - length(regexp_replace({text}, {sql_lit(CJK_CLASS)}, ''))"
     return f"({cjk}) / greatest(length({text}), 1)"
 
 
