@@ -43,9 +43,9 @@ HEADLINE = [
 
 PIPELINE_ROWS = int(os.environ.get("BENCH_PIPELINE_ROWS", "300000"))
 
-# Bench keys stay stable round-over-round; where the exposed registry
-# took over a fine-grained name (merged.py _RENAMED_IN_FULL), the bench
-# still times the ORIGINAL single-mode query under its historical key —
+# Bench keys stay stable round-over-round; where a merged key took over
+# a fine-grained name (its FULL alias in merged.py's _MERGED table), the
+# bench still times the ORIGINAL single-mode query under its historical key —
 # q12 must measure the flagship filter, not the 2× parity∪enforcement
 # union the driver's correctness gate checks.
 _BENCH_ALIAS = {"q12_robots_filter": "q12_robots_filter_reference_parity"}

@@ -132,11 +132,6 @@ def extract_domain_udf(urls: pd.Series) -> pd.Series:
     return extract_domain_vec(urls)
 
 
-@pandas_udf(StringType())
-def extract_tld_udf(domains: pd.Series) -> pd.Series:
-    return domains.map(extract_tld_py)
-
-
 def extract_domain_sql(url: Column) -> Column:
     """JVM-side fast path: netloc → lowercase → port-strip (with the
     ``:8080`` keep-quirk) → www-strip. Matches the UDF on well-formed

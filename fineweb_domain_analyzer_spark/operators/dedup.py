@@ -113,12 +113,6 @@ def minhash_signature_from_shingles(shingles: Column, k: int = 16) -> Column:
     )
 
 
-def minhash_signature(text: Column, k: int = 16, shingle_n: int = 3) -> Column:
-    """Convenience wrapper; prefer materializing shingles first (see
-    minhash_signature_from_shingles)."""
-    return minhash_signature_from_shingles(word_shingles(text, shingle_n), k)
-
-
 def minhash_signature_from_shingles_xx(shingles: Column, k: int = 16) -> Column:
     """PRODUCTION hash family: array<bigint> of k minhashes via
     xxhash64(seed, shingle) — JVM-native 64-bit hashing, no hex-string

@@ -189,13 +189,6 @@ def label_by_domain(
     return labeled.withColumns({"keep": keep, "drop_reason": reason}).drop(*drop_cols)
 
 
-def split_kept_excluded(labeled: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """The reference's dual sink (filtered/excluded JSONL,
-    fineweb_analyzer.py:427-468) as two filtered views; callers write
-    them with ``partitionBy('keep')`` for a single-pass sink."""
-    return labeled.filter(F.col("keep")), labeled.filter(~F.col("keep"))
-
-
 def stratified_hash_sample(
     df: DataFrame,
     rates: dict[str, int],

@@ -61,19 +61,3 @@ def salted_agg(
     return partial.groupBy(key_col).agg(
         *[c.alias(n) for n, c in merge_aggs.items()]
     )
-
-
-def replicate_broadcast_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    n_salts: int = 8,
-    entropy_col: str | None = None,
-) -> DataFrame:
-    """Skew-safe join for when the dim is broadcastable anyway: a plain
-    broadcast join has NO skew problem (no shuffle of the fact side),
-    so this simply broadcasts. Kept as the single place that decides
-    join strategy so a future non-broadcastable dim can switch to
-    salt-replication (fact gets salt k, dim is exploded ×n_salts)
-    without touching call sites."""
-    return fact.join(F.broadcast(dim), key, "left")

@@ -22,7 +22,7 @@ rules evolve.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -105,7 +105,6 @@ class PipelineConfig:
     # the features are codegen expressions sharing the pipeline's one
     # tokenize pass — still a single map stage, streaming-safe.
     enforce_doc_shape: bool = False
-    extra: dict = field(default_factory=dict)
 
 
 def quality_filter_pipeline(

@@ -76,19 +76,3 @@ def write_jsonl_passthrough(
     if max_records_per_file is not None:
         w = w.option("maxRecordsPerFile", max_records_per_file)
     w.partitionBy("keep").text(out_dir)
-
-
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    max_records_per_file: int | None = None,
-) -> None:
-    """Re-serializing JSONL sink (S5) for engine-produced records. Not
-    byte-identical to Python's json.dumps — use the passthrough sink
-    when byte-identity matters. ``max_records_per_file`` bounds output
-    shards (see write_jsonl_passthrough)."""
-    w = df.write.mode(mode)
-    if max_records_per_file is not None:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
-    w.json(path)

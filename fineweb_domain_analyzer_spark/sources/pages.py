@@ -105,12 +105,6 @@ def synth_pages(
     )
 
 
-def write_synth_pages(
-    spark: SparkSession, path: str, n_rows: int, **kwargs
-) -> None:
-    synth_pages(spark, n_rows, **kwargs).write.mode("overwrite").parquet(path)
-
-
 def synth_policy_for_domains(
     spark: SparkSession, n_domains: int = 1000, deny_every: int = 7, cover_every: int = 2
 ) -> DataFrame:

@@ -38,7 +38,6 @@ from fineweb_domain_analyzer_spark.streaming.pipeline import (  # noqa: F401
     read_pages_stream,
     run_incremental,
     streaming_drop_reason_counts,
-    streaming_quality_filter,
 )
 from fineweb_domain_analyzer_spark.streaming.monitor import (  # noqa: F401
     category_window_counts,

@@ -89,20 +89,6 @@ def read_pages_stream(
     return reader.load(path)
 
 
-def streaming_quality_filter(
-    pages: DataFrame, policy: DataFrame, cfg: PipelineConfig | None = None
-) -> DataFrame:
-    """The flagship batch pipeline applied to a streaming frame.
-
-    ``policy`` stays a static (batch) DataFrame: Spark plans a
-    stream-static join, re-evaluating the static side each micro-batch
-    — the broadcast stays fresh if the policy table is overwritten
-    between triggers. All pipeline stages are stateless map work, so
-    the streaming plan is shuffle-free exactly like the batch plan
-    (PLANS.md)."""
-    return quality_filter_pipeline(pages, policy, cfg)
-
-
 def dedup_stream(
     df: DataFrame,
     keys: tuple[str, ...] = ("url",),
@@ -222,6 +208,13 @@ def run_incremental(
     the production cron/orchestrator just re-invokes this after every
     dump drop.
 
+    The batch ``quality_filter_pipeline`` runs on the stream unchanged.
+    ``policy`` stays a static (batch) DataFrame, so Spark plans a
+    stream-static join and re-evaluates the policy side each
+    micro-batch: the broadcast stays fresh if the policy table is
+    overwritten between triggers. Every pipeline stage is stateless map
+    work, so the streaming plan is shuffle-free like the batch plan.
+
     Counting: ``query.recentProgress`` is capped (default ~100
     entries, ``spark.sql.streaming.numRecentProgressUpdates``), so a
     backlog of >100 micro-batches (small ``max_files_per_trigger`` ×
@@ -238,7 +231,7 @@ def run_incremental(
         )
         if dedup:
             pages = dedup_stream(pages)
-        labeled = streaming_quality_filter(pages, policy, cfg)
+        labeled = quality_filter_pipeline(pages, policy, cfg)
         query = (
             labeled.writeStream.format(fmt_out)
             .option("checkpointLocation", checkpoint)

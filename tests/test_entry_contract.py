@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
 import pytest
 
 import __spark_entry__ as entrymod
@@ -42,6 +45,51 @@ def test_full_registry_superset():
     # (zlib UDF); its values are certified by the fixture join in the
     # exposed q13_quality_surface and by tests/test_quality_scrub.py
     assert set(full_q) - set(full_o) == {"q58_compression_ratio"}
+
+
+def test_merged_membership():
+    """Every fine-grained query is exposed under its own name or folded
+    into exactly one merged key, and every folded member resolves to the
+    FULL key that runs it: a misspelled member would otherwise drop an
+    operator from the driver gate without a sound."""
+    from fineweb_domain_analyzer_spark import merged, queries
+
+    full = merged.full_queries()
+    exposed = merged.exposed_queries()
+    owners = Counter(m for e in merged._MERGED.values() for m in e.members)
+    for key, entry in merged._MERGED.items():
+        for m in entry.members:
+            assert m in queries.QUERIES, f"{key}: unknown member {m}"
+            assert full.get(merged._full_name(m)) is queries.QUERIES[m], (key, m)
+    for name, fn in queries.QUERIES.items():
+        if owners[name]:
+            assert owners[name] == 1, f"{name} folded into {owners[name]} keys"
+        else:
+            assert exposed.get(name) is fn, f"{name} neither exposed nor folded"
+    # a merged key that takes over a fine-grained name keeps the original
+    # under a unique FULL alias, so no FULL name is shadowed
+    aliases = [e.full_alias for e in merged._MERGED.values() if e.full_alias]
+    assert len(aliases) == len(set(aliases))
+    assert not set(aliases) & (set(queries.QUERIES) | set(merged._MERGED))
+    for key, entry in merged._MERGED.items():
+        assert (key in queries.QUERIES) == (entry.full_alias is not None), key
+    assert len(full) == len(queries.QUERIES) + len(merged._MERGED)
+
+
+def test_oracle_naming_rule():
+    """Each oracle is ``QNN_SQL`` or ``_qNN_sql()``, never both, and
+    names an existing query (an orphaned oracle is a renamed query)."""
+    from fineweb_domain_analyzer_spark import queries
+
+    numbers = {queries._query_number(n) for n in queries.QUERIES}
+    for attr in vars(queries):
+        m = re.fullmatch(r"Q(\d+)_SQL|_q(\d+)_sql", attr)
+        if m:
+            n = int(m.group(1) or m.group(2))
+            assert n in numbers, f"{attr} has no query"
+            assert not (
+                hasattr(queries, f"Q{n:02d}_SQL") and hasattr(queries, f"_q{n}_sql")
+            ), f"q{n} has two oracles"
 
 
 @pytest.mark.parametrize("name", sorted(entrymod.queries()))

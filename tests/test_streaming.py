@@ -21,7 +21,6 @@ from fineweb_domain_analyzer_spark.streaming import (
     read_pages_stream,
     run_incremental,
     streaming_drop_reason_counts,
-    streaming_quality_filter,
 )
 
 N_DOMAINS = 50
@@ -138,7 +137,7 @@ def test_windowed_drop_reason_counts_match_batch(spark, tmp_path):
     policy = synth_policy_for_domains(spark, N_DOMAINS)
     _land(spark, in_dir, 400, seed=4)
 
-    labeled = streaming_quality_filter(read_pages_stream(spark, in_dir), policy)
+    labeled = quality_filter_pipeline(read_pages_stream(spark, in_dir), policy)
     counts = streaming_drop_reason_counts(
         labeled, window_duration="1 hour", watermark_delay="0 seconds"
     )
