@@ -2,9 +2,8 @@
 
 Reference (/root/reference/fineweb_analyzer.py:480-485) emits one global
 ``{total_processed, filtered_kept, excluded_count, keep_ratio}``. The
-north rule requires per-partition lineage (rows in/out) plus a
-drop-reason histogram; both are single partial-aggregating shuffles.
-``job.py`` collects its run report in the pass that writes instead (one
+north rule requires lineage (rows in/out) plus a drop-reason histogram.
+``job.py`` collects both per split in the pass that writes (one
 ``Observation`` per split) and only reads back splits committed without
 recorded counts.
 """
@@ -38,23 +37,6 @@ def filter_stats(labeled: DataFrame) -> DataFrame:
             F.round(F.col("filtered_kept") / F.col("total_processed") * 100, 2)
         )
         .alias("keep_ratio"),
-    )
-
-
-def partition_lineage(labeled: DataFrame) -> DataFrame:
-    """Per-input-partition rows in/out — north-rule lineage. Map-side
-    partial agg keyed by spark_partition_id(): one row per task."""
-    return (
-        labeled.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(
-            F.count(F.lit(1)).alias("total_processed"),
-            F.sum(F.col("keep").cast("long")).alias("filtered_kept"),
-            F.sum((~F.col("keep")).cast("long")).alias("excluded_count"),
-        )
-        .withColumn(
-            "keep_ratio",
-            F.round(F.col("filtered_kept") / F.col("total_processed") * 100, 2),
-        )
     )
 
 

@@ -47,6 +47,32 @@ def test_full_registry_superset():
     assert set(full_q) - set(full_o) == {"q58_compression_ratio"}
 
 
+def test_bench_headline_resolves_without_spark():
+    """Every bench.py headline name runs a FULL-registry query, and
+    importing bench starts no Spark session (checked in a fresh
+    interpreter, since this one may hold the suite's session)."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    import bench
+    from fineweb_domain_analyzer_spark import merged
+
+    full = merged.full_queries()
+    for name in bench.HEADLINE:
+        assert bench._BENCH_ALIAS.get(name, name) in full, name
+    probe = "import bench; from pyspark import SparkContext; print(SparkContext._gateway)"
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=Path(bench.__file__).parent,
+        capture_output=True,
+        text=True,
+        check=True,
+        timeout=120,
+    )
+    assert out.stdout.strip() == "None", out.stdout + out.stderr
+
+
 def test_merged_membership():
     """Every fine-grained query is exposed under its own name or folded
     into exactly one merged key, and every folded member resolves to the

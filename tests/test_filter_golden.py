@@ -20,7 +20,6 @@ from fineweb_domain_analyzer_spark.operators.filtering import label_pages
 from fineweb_domain_analyzer_spark.operators.metrics import (
     drop_reason_histogram,
     filter_stats,
-    partition_lineage,
 )
 from fineweb_domain_analyzer_spark.sources.jsonl import read_jsonl_with_raw
 
@@ -86,13 +85,6 @@ def test_drop_reason_histogram(labeled):
     hist = {r["drop_reason"]: r["cnt"] for r in drop_reason_histogram(labeled).collect()}
     assert hist.get("kept") == 34
     assert hist.get("robots_disallowed", 0) == 16
-
-
-def test_partition_lineage_sums_to_global(labeled):
-    rows = partition_lineage(labeled).collect()
-    assert sum(r["total_processed"] for r in rows) == 50
-    assert sum(r["filtered_kept"] for r in rows) == 34
-    assert sum(r["excluded_count"] for r in rows) == 16
 
 
 def test_plan_is_broadcast_join_no_shuffle(labeled):

@@ -324,8 +324,7 @@ def test_iceberg_branch_full_resume_against_real_catalog(spark, tmp_path):
 def test_jvm_domain_path_labels_match_exact_udf(spark, pages, policy):
     """exact_domain=False (staged SQL domain) must produce the same
     keep/drop_reason labels as the urlparse-parity Arrow UDF on
-    well-formed URLs — the equivalence the bench's jvm_only_* metric
-    relies on."""
+    well-formed URLs, so the UDF-free plan may stand in for it there."""
     from fineweb_domain_analyzer_spark.plans.pipeline import (
         PipelineConfig,
         quality_filter_pipeline,
