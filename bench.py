@@ -102,6 +102,11 @@ def main() -> int:
     # generated (once, cached) in a child Spark process before ours starts
     meta, _gen_s = ensure_inputs(LabelsShortdoc.name, DEFAULT_SEED)
 
+    # the Python workers import the package through PYTHONPATH, whatever
+    # directory the bench was started from
+    root = os.path.dirname(os.path.abspath(__file__))
+    paths = [root] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    os.environ["PYTHONPATH"] = os.pathsep.join(dict.fromkeys(paths))
     spark = get_spark(
         app_name="fineweb-spark-bench",
         extra_confs={"spark.ui.enabled": "false", "spark.ui.showConsoleProgress": "false"},

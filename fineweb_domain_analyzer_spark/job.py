@@ -9,20 +9,22 @@ Cluster usage (north rule: packaged for --py-files, resumable):
         --policy <policy-parquet> \
         --output <out-path> \
         --manifest <checkpoint.json> \
-        [--splits <comma-separated split keys>] \
+        [--splits all | <comma-separated buckets 0-15>] \
         [--synth-rows N]   # synthesize deterministic input instead
 
-The job is batch + idempotent: input is processed in named splits,
-each committed via dynamic-partition overwrite and recorded in the
-manifest (plans/checkpoint.py). Re-running after a crash reprocesses
-at most the one uncommitted split.
+The job is batch + idempotent: ``--splits`` is either ``all`` or
+distinct url-hash buckets 0-15. Every pending split is processed in one
+pass — one scan, one write partitioned by split under dynamic-partition
+overwrite — and recorded in the manifest in one commit
+(plans/checkpoint.py). Re-running after a crash reprocesses at most the
+one uncommitted pass.
 
 The run report (one JSON line) is collected in the same pass that
-writes: each split's write carries one ``Observation`` counting rows,
-kept rows and rows per ``drop_reason``, and those counts are recorded
-with the split in the manifest, in the same atomic replace. The report
-sums them over every committed split, so it covers splits committed by
-earlier runs without rescanning the output. A split committed by a
+writes: the write carries one ``Observation`` counting rows, kept rows
+and rows per ``drop_reason`` for each split, and those counts are
+recorded with the splits in the manifest, in the same atomic replace.
+The report sums them over every committed split, so it covers splits
+committed by earlier runs without rescanning the output. A split committed by a
 manifest written before counts were recorded is counted by one
 read-back of just those splits.
 
@@ -39,10 +41,9 @@ import sys
 import time
 from collections import Counter
 
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from fineweb_domain_analyzer_spark.functions.sqltext import sql_ident, sql_lit
+from fineweb_domain_analyzer_spark.functions.sqltext import sql_lit
 from fineweb_domain_analyzer_spark.operators.filtering import REASON_KEPT
 from fineweb_domain_analyzer_spark.operators.metrics import (
     drop_reason_histogram,
@@ -61,17 +62,13 @@ from fineweb_domain_analyzer_spark.sources.pages import (
 )
 
 SPLIT_COL = "_split"
+BUCKETS = {str(i) for i in range(16)}
 
 
-def split_stats() -> list[Column]:
-    """The per-split counts observed on each split's write: ``rows``
-    plus one count per drop_reason. Observed metrics are merged from the
-    write's successful tasks only, so a retried task is not counted
-    twice."""
-    return [F.expr("count(1) AS rows")] + [
-        F.expr(f"count_if(drop_reason = {sql_lit(r)}) AS {sql_ident(r)}")
-        for r in DROP_REASONS
-    ]
+def split_stats() -> dict[str, str]:
+    """The per-split counts observed on the write, as SQL row predicates:
+    ``rows`` plus one count per drop_reason."""
+    return {"rows": "true"} | {r: f"drop_reason = {sql_lit(r)}" for r in DROP_REASONS}
 
 
 def run_report(spark, cp: Checkpointer, output: str) -> dict:
@@ -110,10 +107,17 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--policy", help="domain-policy parquet path")
     p.add_argument("--output", required=True)
     p.add_argument("--manifest", required=True, help="checkpoint manifest path")
-    p.add_argument("--splits", default="all", help="comma-separated split keys")
+    p.add_argument("--splits", default="all", help="all, or comma-separated url buckets 0-15")
     p.add_argument("--synth-rows", type=int, default=0, help="synthesize input")
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
+    splits = args.splits.split(",")
+    scheme = {"all"} if splits == ["all"] else BUCKETS
+    if len(set(splits)) < len(splits) or not scheme.issuperset(splits):
+        p.error(f"--splits takes 'all' or distinct buckets 0-15, not {args.splits!r}")
+    cp = Checkpointer(args.manifest)
+    if other := cp.processed_splits() - scheme:
+        p.error(f"{args.manifest} holds splits of another scheme: {sorted(other)}")
 
     from fineweb_domain_analyzer_spark.session import get_spark_owned
 
@@ -122,51 +126,36 @@ def main(argv: list[str] | None = None) -> int:
     )
     t0 = time.time()
 
-    def bucket_split(df, split):
-        """split key = stable bucket of url → disjoint restartable units."""
-        if split == "all":
-            return df
-        n = 16
-        return df.filter(F.pmod(F.xxhash64("url"), F.lit(n)) == int(split))
+    # the policy dimension's schema is fixed; giving it skips the Spark
+    # job that would infer it from the parquet footers
+    policy = (
+        synth_policy_for_domains(spark, 2000) if args.synth_rows
+        else spark.read.schema(DOMAIN_POLICY).parquet(args.policy)
+    )
+    # split key: "all", or a stable bucket of url → disjoint units; under
+    # "all" the routing filter folds to true and the plan is unchanged
+    key = F.lit("all") if splits == ["all"] else (
+        F.pmod(F.xxhash64("url"), F.lit(len(BUCKETS))).cast("string")
+    )
 
-    if args.synth_rows:
-        policy = synth_policy_for_domains(spark, 2000)
+    def process(spark_, pending):
+        pages = (
+            synth_pages(spark_, args.synth_rows, n_domains=2000, seed=42)
+            if args.synth_rows else spark_.read.parquet(args.pages)
+        )
+        out = quality_filter_pipeline(
+            pages.filter(key.isin(pending)), policy, PipelineConfig()
+        )
+        return out.withColumn(SPLIT_COL, key)
 
-        def load_split(spark_, split):
-            return bucket_split(
-                synth_pages(spark_, args.synth_rows, n_domains=2000, seed=42), split
-            )
-
-    else:
-        # the policy dimension's schema is fixed; giving it skips the
-        # Spark job that would infer it from the parquet footers
-        policy = spark.read.schema(DOMAIN_POLICY).parquet(args.policy)
-
-        def load_split(spark_, split):
-            return bucket_split(spark_.read.parquet(args.pages), split)
-
-    def process(spark_, split):
-        pages = load_split(spark_, split)
-        return quality_filter_pipeline(pages, policy, PipelineConfig())
-
-    cp = Checkpointer(args.manifest)
-    splits = args.splits.split(",")
     done = run_resumable(
         spark, splits, process, args.output, cp,
         split_col=SPLIT_COL, split_stats=split_stats(),
     )
-    report = run_report(spark, cp, args.output)
+    report = {"splits_processed": done, **run_report(spark, cp, args.output)}
     sec = time.time() - t0
-    print(
-        json.dumps(
-            {
-                "splits_processed": done,
-                **report,
-                "wall_sec": round(sec, 2),
-                "docs_per_sec": round(report["total"] / sec, 1),
-            }
-        )
-    )
+    report |= {"wall_sec": round(sec, 2), "docs_per_sec": round(report["total"] / sec, 1)}
+    print(json.dumps(report))
     if created:
         spark.stop()
     return 0

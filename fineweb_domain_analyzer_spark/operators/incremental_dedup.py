@@ -551,7 +551,7 @@ class DedupIndex:
                 self.spark.conf.unset(_conf_key)
             else:
                 self.spark.conf.set(_conf_key, _prev_mode)
-        self.checkpointer.mark_processed(batch_id)
+        self.checkpointer.mark_processed([batch_id])
         # force the label materialization NOW (while upstream caches are
         # warm) so unpersisting them below can't trigger a recompute of
         # the band join when the caller first consumes the result

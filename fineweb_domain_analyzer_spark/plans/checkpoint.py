@@ -5,18 +5,21 @@ checkpoint". The reference has no resume at all (a crash reprocesses
 everything). Design (SURVEY §7.5):
 
 * Work is partitioned by an INPUT SPLIT KEY (e.g. source file path, or
-  a stable bucket of url) — the unit of atomic progress.
-* Each successful unit commit appends its split key to a manifest,
-  together with the counts observed while the unit was written
-  (``run_resumable``'s ``split_stats``), if any.
+  a stable bucket of url) — the unit of lineage: one output partition
+  and one manifest entry each.
+* A run processes every pending split in ONE pass — one scan routes each
+  row to its split's partition — and one manifest commit records them,
+  with the counts observed while they were written, if any.
   With Iceberg, the manifest is the snapshot summary property
   ``processed-splits`` (atomic with the data commit). Without Iceberg
-  (this sandbox), the manifest is a JSON file written AFTER the unit's
+  (local mode), the manifest is a JSON file written AFTER the pass's
   parquet write succeeds — same protocol, weaker atomicity, clearly
   flagged below.
 * Resume = anti-join pending splits against the manifest, process the
-  remainder. Exactly-once comes from overwrite-by-split-key
-  (dynamic partition overwrite), making re-commits idempotent.
+  remainder in one pass. A crash inside the pass re-runs the whole pass:
+  resume precision traded for one scan and one commit per run.
+  Exactly-once comes from overwrite-by-split-key (dynamic partition
+  overwrite), making re-commits idempotent.
 
 This module is deliberately engine-level (paths + DataFrames), not
 tied to one catalog: `IcebergCheckpointer` overrides commit/load to
@@ -29,17 +32,19 @@ import json
 import os
 import tempfile
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
+
+from fineweb_domain_analyzer_spark.functions.sqltext import sql_ident, sql_lit
 
 
 class Checkpointer:
     """File-manifest checkpointer (parquet/local mode).
 
-    Commit protocol: write unit output with dynamic partition overwrite
-    keyed by the split column, then record the split in the manifest.
-    A crash between the two steps re-processes one unit — idempotent
-    because the overwrite replaces, never appends.
+    Commit protocol: write the pass's output with dynamic partition
+    overwrite keyed by the split column, then record its splits in the
+    manifest. A crash between the two steps re-processes the pass —
+    idempotent because the overwrite replaces, never appends.
     """
 
     def __init__(self, manifest_path: str):
@@ -78,15 +83,15 @@ class Checkpointer:
             json.dump(manifest, f)
         os.replace(tmp, self.manifest_path)
 
-    def mark_processed(self, split: str, counts: dict | None = None) -> None:
+    def mark_processed(self, splits: list[str], counts: dict | None = None) -> None:
+        """Record ``splits``, with their ``counts`` keyed by split, in one
+        manifest replace. A split given without counts keeps none."""
         manifest = self._load()
-        splits = set(manifest["splits"]) | {split}
         recorded = manifest.get("counts", {})
-        if counts is None:
+        for split in splits:
             recorded.pop(split, None)
-        else:
-            recorded[split] = counts
-        self._write_manifest(splits, recorded)
+        recorded.update(counts or {})
+        self._write_manifest(set(manifest["splits"]) | set(splits), recorded)
 
     def replace_splits(self, splits: set[str]) -> None:
         """Atomically REPLACE the manifest's split set (compaction:
@@ -103,26 +108,33 @@ class Checkpointer:
 def run_resumable(
     spark: SparkSession,
     splits: list[str],
-    process_split,  # (spark, split) -> DataFrame
+    process,  # (spark, pending splits) -> DataFrame carrying split_col
     out_path: str,
     checkpointer: Checkpointer,
     split_col: str = "_split",
-    split_stats: list[Column] | None = None,
+    split_stats: dict[str, str] | None = None,
 ) -> list[str]:
-    """Process pending splits one unit at a time with idempotent
-    overwrite-by-split commits. Returns the splits processed this run.
+    """Process every pending split in ONE pass; return the splits
+    processed this run.
 
-    ``split_stats`` (aggregate Columns) are observed on each split's
-    write — one ``Observation`` per split, collected in the same pass
-    that writes — and recorded with the split in the manifest
+    ``process(spark, pending)`` returns one frame holding only the
+    pending splits' rows, each tagged with its split in ``split_col``.
+    One ``partitionBy(split_col)`` write under dynamic partition
+    overwrite replaces exactly those partitions, then one manifest
+    commit records them all, whatever the number of splits. A crash
+    inside the pass commits nothing, and the next run re-runs it.
+
+    ``split_stats`` maps a count's name to a row predicate in SQL text.
+    The write carries one ``Observation`` of one map column, split →
+    ``named_struct`` of one ``count_if(split_col = split AND predicate)``
+    per count (one SQL text: a 16-split pass has 144 counts), and each
+    split's counts are recorded with it in the manifest
     (``Checkpointer.split_counts``). Observed metrics are merged from
-    the write's successful tasks only, so a retried task is not
-    counted twice.
-
-    At cluster scale each 'split' is typically a batch of hundreds of
-    files — unit granularity trades resume precision against commit
-    overhead; snapshot-per-unit keeps Iceberg metadata churn bounded.
+    successful tasks only, so a retried task is not counted twice.
     """
+    pending = checkpointer.pending(splits)
+    if not pending:
+        return []
     # scope the dynamic-overwrite mode to this run and restore the
     # caller's setting — leaking it would change the semantics of every
     # later partitioned overwrite in the shared session
@@ -130,21 +142,21 @@ def run_resumable(
     _prev = spark.conf.get(_key, None)
     spark.conf.set(_key, "dynamic")
     try:
-        done_now = []
-        for split in checkpointer.pending(splits):
-            df = process_split(spark, split).withColumn(split_col, F.lit(split))
-            obs = None
-            if split_stats:
-                obs = Observation()
-                df = df.observe(obs, *split_stats)
-            (
-                df.write.mode("overwrite")
-                .partitionBy(split_col)
-                .parquet(out_path)
-            )
-            checkpointer.mark_processed(split, obs.get if obs else None)
-            done_now.append(split)
-        return done_now
+        df = process(spark, pending)
+        obs = Observation()
+        if split_stats:
+            df = df.observe(obs, F.expr("map(" + ", ".join(
+                f"{sql_lit(split)}, named_struct(" + ", ".join(
+                    f"{sql_lit(name)}, count_if("
+                    f"{sql_ident(split_col)} = {sql_lit(split)} AND ({pred}))"
+                    for name, pred in split_stats.items()
+                ) + ")"
+                for split in pending
+            ) + ") AS counts"))
+        df.write.mode("overwrite").partitionBy(split_col).parquet(out_path)
+        counts = split_stats and {s: c.asDict() for s, c in obs.get["counts"].items()}
+        checkpointer.mark_processed(pending, counts)
+        return pending
     finally:
         if _prev is None:
             spark.conf.unset(_key)
@@ -157,12 +169,11 @@ class IcebergCheckpointer(Checkpointer):
 
     The manifest lives in the table property ``processed-splits``
     (public Iceberg SQL: ``ALTER TABLE … SET TBLPROPERTIES``), written
-    by ``mark_processed`` immediately after each unit's data commit and
+    by ``mark_processed`` immediately after each pass's data commit and
     read back by ``processed_splits`` — so write and read use the same
     store, and resume works without any external file. A crash between
-    the data commit and the property update reprocesses exactly one
-    unit, which the dynamic-partition-overwrite commit makes idempotent
-    (same window as the file-manifest protocol above).
+    the data commit and the property update reprocesses the pass,
+    idempotently (same window as the file-manifest protocol above).
 
     Strictly-atomic variant for engines that expose it: attach the
     manifest as a *snapshot summary* property in the same commit
@@ -217,13 +228,13 @@ class IcebergCheckpointer(Checkpointer):
         props = {r["key"]: r["value"] for r in rows}
         return set(json.loads(props.get(self.PROP, "[]")))
 
-    def mark_processed(self, split: str, counts: dict | None = None) -> None:
-        """The catalog branch records the split only, not its
-        ``counts``."""
+    def mark_processed(self, splits: list[str], counts: dict | None = None) -> None:
+        """The catalog branch records the splits only, not their
+        ``counts``, in one ``ALTER TABLE``."""
         if not self._have_iceberg:
-            return super().mark_processed(split, counts)
-        splits = sorted(self.processed_splits() | {split})
-        payload = json.dumps(splits).replace("'", "''")
+            return super().mark_processed(splits, counts)
+        payload = json.dumps(sorted(self.processed_splits() | set(splits)))
+        payload = payload.replace("'", "''")
         self.spark.sql(
             f"ALTER TABLE {self.table} SET TBLPROPERTIES ('{self.PROP}' = '{payload}')"
         )

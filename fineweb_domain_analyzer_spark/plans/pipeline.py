@@ -93,10 +93,6 @@ class PipelineConfig:
     # page_type_rules=None uses DEFAULT_PAGE_TYPE_RULES.
     drop_page_types: tuple[str, ...] = ()
     page_type_rules: list[tuple[str, str]] | None = None
-    # bound the page-type regex scan to the first N chars (None = full
-    # text; see with_page_type's scan_chars — markers sit page-top, so
-    # this caps gate cost independently of document length)
-    page_type_scan_chars: int | None = None
     # opt-in Gopher doc-shape gate (operators/quality.py:
     # with_doc_shape_features): bullet/ellipsis line fractions,
     # alpha-word fraction, #/… symbol ratios at the paper thresholds,
@@ -174,11 +170,7 @@ def quality_filter_pipeline(
         # boilerplate page classes outrank the quality heuristics: a
         # parked/soft-404 page is attributed to its page type, not to
         # whichever Gopher rule it happens to also trip
-        labeled = with_page_type(
-            labeled,
-            rules=cfg.page_type_rules,
-            scan_chars=cfg.page_type_scan_chars,
-        )
+        labeled = with_page_type(labeled, rules=cfg.page_type_rules)
         whens.append(
             (sql_in("page_type", cfg.drop_page_types), sql_lit(REASON_PAGE_TYPE))
         )

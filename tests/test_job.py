@@ -4,30 +4,58 @@ from __future__ import annotations
 
 import json
 
-from fineweb_domain_analyzer_spark import job
+import pytest
+
+from fineweb_domain_analyzer_spark import job, session
 
 
-def test_job_synth_splits_are_disjoint(spark, tmp_path, capsys, monkeypatch):
+def _write_jobs(spark, description: str) -> list[int]:
+    """Ids of the jobs run under ``description`` whose stages wrote
+    output records, read from the status store."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    jobs, out = store.jobsList(None), []
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        if not (j.description().isDefined() and j.description().get() == description):
+            continue
+        written = 0
+        for k in range(j.stageIds().size()):
+            try:
+                written += store.lastStageAttempt(j.stageIds().apply(k)).outputRecords()
+            except Exception:  # skipped stage: never ran, no attempt recorded
+                pass
+        if written:
+            out.append(j.jobId())
+    return out
+
+
+def test_job_synth_splits_are_disjoint(spark, tmp_path, capsys):
     """--splits under --synth-rows must bucket the corpus, not write one
-    full copy per split (regression: synth mode ignored the split key)."""
+    full copy per split (regression: synth mode ignored the split key),
+    and the 16 splits are one pass: one write job, one manifest commit."""
     # job.main builds its own session via get_spark(); reuse the test
     # session's master to avoid a second JVM
     out = tmp_path / "out"
     manifest = tmp_path / "m.json"
-    rc = job.main(
-        [
-            "--synth-rows",
-            "20000",
-            "--splits",
-            "0,1,2,3,4,5,6,7,8,9,10,11,12,13,14,15",
-            "--output",
-            str(out),
-            "--manifest",
-            str(manifest),
-            "--master",
-            "local[4]",
-        ]
-    )
+    description = f"job-16-splits/{tmp_path.name}"
+    spark.sparkContext.setJobDescription(description)
+    try:
+        rc = job.main(
+            [
+                "--synth-rows",
+                "20000",
+                "--splits",
+                "0,1,2,3,4,5,6,7,8,9,10,11,12,13,14,15",
+                "--output",
+                str(out),
+                "--manifest",
+                str(manifest),
+                "--master",
+                "local[4]",
+            ]
+        )
+    finally:
+        spark.sparkContext.setJobDescription(None)
     assert rc == 0
     report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     # all 16 url-hash buckets together must partition the corpus exactly
@@ -35,6 +63,48 @@ def test_job_synth_splits_are_disjoint(spark, tmp_path, capsys, monkeypatch):
     assert report["kept"] + report["excluded"] == 20000
     assert len(report["splits_processed"]) == 16
     assert set(json.load(open(manifest))["splits"]) == {str(i) for i in range(16)}
+    assert len(_write_jobs(spark, description)) == 1
+    by_split = spark.read.parquet(str(out)).groupBy("_split").count().collect()
+    counts = json.load(open(manifest))["counts"]
+    assert {str(r["_split"]): r["count"] for r in by_split} == {
+        s: c["rows"] for s, c in counts.items()
+    }
+
+
+@pytest.mark.parametrize("splits", ["all,3", "16", "0,0", "", "3,x"])
+def test_job_refuses_split_misuse(tmp_path, monkeypatch, splits):
+    """--splits is exactly 'all' or distinct buckets 0-15; anything else
+    is refused before a session starts (it used to write duplicate rows
+    under 'all,3', commit an empty split '16', or process '0' twice)."""
+    monkeypatch.setattr(session, "get_spark_owned", _no_session)
+    argv = ["--splits", splits, "--output", str(tmp_path / "o"),
+            "--manifest", str(tmp_path / "m.json"), "--synth-rows", "320"]
+    with pytest.raises(SystemExit) as exc:
+        job.main(argv)
+    assert exc.value.code == 2
+    assert not (tmp_path / "o").exists()
+
+
+@pytest.mark.parametrize(
+    ("committed", "splits"),
+    [(["all"], "0,1"), (["3"], "all")],
+    ids=["all-then-buckets", "buckets-then-all"],
+)
+def test_job_refuses_manifest_of_the_other_scheme(tmp_path, monkeypatch, committed, splits):
+    """A manifest holding splits of the other scheme would count the
+    same docs twice in the report; the job refuses it."""
+    monkeypatch.setattr(session, "get_spark_owned", _no_session)
+    manifest = tmp_path / "m.json"
+    manifest.write_text(json.dumps({"splits": committed}))
+    argv = ["--splits", splits, "--output", str(tmp_path / "o"),
+            "--manifest", str(manifest), "--synth-rows", "320"]
+    with pytest.raises(SystemExit) as exc:
+        job.main(argv)
+    assert exc.value.code == 2
+
+
+def _no_session(*args, **kwargs):
+    raise AssertionError("a refused --splits must not start a session")
 
 
 def test_job_resume_skips_committed_splits(spark, tmp_path, capsys):

@@ -3,8 +3,11 @@
 from __future__ import annotations
 
 import json
+from functools import reduce
+from pathlib import Path
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fineweb_domain_analyzer_spark.operators.metrics import (
@@ -93,47 +96,107 @@ def test_default_allow_for_uncovered_domains(pages, policy):
     assert odd.count() == 0
 
 
+def _tagged_pages(spark, pending, n_rows, offset):
+    """The pending splits' rows in one frame, each tagged with its split
+    in ``_split``; ``offset(split)`` gives each split its own url range."""
+    return reduce(DataFrame.unionByName, [
+        synth_pages(spark, n_rows, n_domains=10, start=offset(s) * n_rows)
+        .select("url", F.lit(s).alias("_split"))
+        for s in pending
+    ])
+
+
 def test_checkpoint_resume(spark, tmp_path):
     manifest = str(tmp_path / "manifest.json")
     out = str(tmp_path / "out")
     cp = Checkpointer(manifest)
     calls = []
 
-    def process(spark_, split):
-        calls.append(split)
-        return synth_pages(spark_, 100, n_domains=10, seed=int(split)).select("url")
+    def process(spark_, pending):
+        calls.append(pending)
+        return _tagged_pages(spark_, pending, 100, int)
 
     splits = ["1", "2", "3"]
     done = run_resumable(spark, splits, process, out, cp)
     assert done == splits
-    # second run: nothing pending → no reprocessing
+    # second run: nothing pending → no pass at all
     done2 = run_resumable(spark, splits, process, out, cp)
     assert done2 == []
-    assert calls == splits
+    assert calls == [splits]
     # new split appears → only it runs; prior output intact
     done3 = run_resumable(spark, splits + ["4"], process, out, cp)
     assert done3 == ["4"]
+    assert calls == [splits, ["4"]]
     total = spark.read.parquet(out).count()
     assert total == 400
 
 
 def test_checkpoint_idempotent_overwrite(spark, tmp_path):
-    """Simulate crash-after-write-before-mark: rerun must overwrite the
-    split's output, not duplicate it."""
+    """Simulate crash-after-write-before-mark: the rerun must overwrite
+    the pass's splits, not duplicate them."""
     manifest = str(tmp_path / "m.json")
     out = str(tmp_path / "out")
     cp = Checkpointer(manifest)
 
-    def process(spark_, split):
-        return synth_pages(spark_, 50, n_domains=5, seed=int(split)).select("url")
+    def process(spark_, pending):
+        return _tagged_pages(spark_, pending, 50, int)
 
-    run_resumable(spark, ["9"], process, out, cp)
+    run_resumable(spark, ["8", "9"], process, out, cp)
     # crash simulation: wipe the manifest (data remains), rerun
     import os
 
     os.remove(manifest)
-    run_resumable(spark, ["9"], process, out, Checkpointer(manifest))
-    assert spark.read.parquet(out).count() == 50
+    run_resumable(spark, ["8", "9"], process, out, Checkpointer(manifest))
+    assert spark.read.parquet(out).count() == 100
+
+
+def _crash_inside_the_pass(spark, out, checkpointer, splits):
+    """Inject a crash inside the one pass (every row of the last split
+    fails the write job), then re-run from a fresh checkpointer (a 'new
+    driver'). Nothing of the crashed pass may be committed, the re-run
+    processes every pending split once, and every row is on disk
+    exactly once. Returns the re-run's checkpointer."""
+    calls = []
+
+    def process(spark_, pending):
+        calls.append(pending)
+        df = _tagged_pages(spark_, pending, 40, splits.index)
+        if len(calls) == 1:
+            crash = F.raise_error(F.lit("injected crash"))
+            df = df.withColumn(
+                "url", F.when(F.col("_split") == splits[-1], crash).otherwise(F.col("url"))
+            )
+        return df
+
+    stats = {"rows": "true"}
+    cp = checkpointer()
+    with pytest.raises(Exception, match="injected crash"):
+        run_resumable(spark, splits, process, out, cp, split_stats=stats)
+    assert cp.processed_splits() == set()
+    assert not list(Path(out).glob("_split=*"))
+
+    cp = checkpointer()
+    assert run_resumable(spark, splits, process, out, cp, split_stats=stats) == splits
+    assert calls == [splits, splits]
+    assert cp.processed_splits() == set(splits)
+    written = spark.read.parquet(out)
+    per_split = written.groupBy("_split").agg(
+        F.count("*").alias("rows"), F.countDistinct("url").alias("urls")
+    )
+    assert {str(r["_split"]): (r["rows"], r["urls"]) for r in per_split.collect()} == {
+        s: (40, 40) for s in splits
+    }
+    assert written.select("url").distinct().count() == 40 * len(splits)
+    return cp
+
+
+def test_file_manifest_crash_inside_the_pass(spark, tmp_path):
+    manifest = tmp_path / "m.json"
+    cp = _crash_inside_the_pass(
+        spark, str(tmp_path / "out"), lambda: Checkpointer(str(manifest)), ["3", "7"]
+    )
+    # the counts observed on the re-run's write land with its splits
+    assert cp.split_counts() == {"3": {"rows": 40}, "7": {"rows": 40}}
 
 
 def test_synth_pages_null_text_decodes_byte_identical(spark):
@@ -237,8 +300,8 @@ def test_iceberg_checkpointer_property_branch(tmp_path):
     cp = IcebergCheckpointer(fake, "cat.db.t", str(tmp_path / "manifest.json"))
     assert cp._have_iceberg is True
     assert cp.processed_splits() == set()
-    cp.mark_processed("split-a")
-    cp.mark_processed("split-b")
+    cp.mark_processed(["split-a"])
+    cp.mark_processed(["split-b"])
     assert cp.processed_splits() == {"split-a", "split-b"}
     assert cp.pending(["split-a", "split-b", "split-c"]) == ["split-c"]
     # resume from a brand-new driver sharing only the catalog
@@ -255,7 +318,7 @@ def test_iceberg_checkpointer_fallback_branch(tmp_path):
     fake = _FakeIcebergSession(have_catalog=False)
     cp = IcebergCheckpointer(fake, "cat.db.t", str(tmp_path / "manifest.json"))
     assert cp._have_iceberg is False
-    cp.mark_processed("s1")
+    cp.mark_processed(["s1"])
     assert cp.processed_splits() == {"s1"}
     assert (tmp_path / "manifest.json").exists()
 
@@ -267,12 +330,10 @@ def test_iceberg_branch_full_resume_against_real_catalog(spark, tmp_path):
     TBLPROPERTIES are identical statements on both), so with the
     detect probe forced (no Iceberg jar in this sandbox, and no
     network to vendor one) the whole run_resumable flow exercises
-    _have_iceberg=True: property-store manifest, crash-resume, quote
-    escaping through the real parser — never the file fallback."""
-    from fineweb_domain_analyzer_spark.plans.checkpoint import (
-        IcebergCheckpointer,
-        run_resumable,
-    )
+    _have_iceberg=True: property-store manifest, a crash inside the
+    pass and its resume, quote escaping through the real parser — never
+    the file fallback."""
+    from fineweb_domain_analyzer_spark.plans.checkpoint import IcebergCheckpointer
 
     table = "ckpt_prop_store"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
@@ -283,33 +344,18 @@ def test_iceberg_branch_full_resume_against_real_catalog(spark, tmp_path):
     try:
         manifest = tmp_path / "never_created.json"
         out = str(tmp_path / "out")
-        cp = IcebergCheckpointer(spark, table, str(manifest), assume_iceberg=True)
-        assert cp._have_iceberg is True
-        calls = []
-
-        def process(spark_, split):
-            calls.append(split)
-            if split == "b'2" and len(calls) < 3:
-                raise RuntimeError("injected crash")
-            return synth_pages(spark_, 40, n_domains=4, seed=1).select("url")
-
+        assert IcebergCheckpointer(
+            spark, table, str(manifest), assume_iceberg=True
+        )._have_iceberg is True
         # split name with a quote exercises escaping through the real
-        # SQL parser, not a regex fake
-        splits = ["a1", "b'2"]
-        with pytest.raises(RuntimeError, match="injected crash"):
-            run_resumable(spark, splits, process, out, cp)
-        assert cp.processed_splits() == {"a1"}
-
-        # 'new driver': fresh checkpointer, same catalog — resumes from
-        # the table property, reprocessing only the failed split
-        cp2 = IcebergCheckpointer(
-            spark, table, str(tmp_path / "other.json"), assume_iceberg=True
+        # SQL parser, not a regex fake; each checkpointer is a 'new
+        # driver' sharing only the catalog
+        _crash_inside_the_pass(
+            spark,
+            out,
+            lambda: IcebergCheckpointer(spark, table, str(manifest), assume_iceberg=True),
+            ["a1", "b'2"],
         )
-        done = run_resumable(spark, splits, process, out, cp2)
-        assert done == ["b'2"]
-        assert cp2.processed_splits() == {"a1", "b'2"}
-        assert calls == ["a1", "b'2", "b'2"]
-        assert spark.read.parquet(out).count() == 80
         # the property store really is the catalog, not a file
         assert not manifest.exists()
         props = {
