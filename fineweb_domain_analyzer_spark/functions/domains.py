@@ -15,11 +15,13 @@ Two implementations:
 * ``extract_domain_udf`` — Arrow-batched pandas UDF wrapping
   ``urllib.parse.urlparse``. Byte-exact with the reference (the
   F1≥0.99 invariant hinges on matching urlparse edge cases). This is
-  the one the filter pipeline uses.
-* ``extract_domain_sql`` / ``extract_tld_sql`` — pure Column
+  the one the filter pipeline and the streaming domain stats use.
+* ``with_domain_sql`` / ``extract_tld_sql`` — pure Column
   expressions (whole-stage-codegen, JVM-side). Same result on
-  well-formed http(s) URLs; used on hot paths where inputs are known
-  clean and for the DuckDB-oracle parity queries.
+  well-formed ``scheme://netloc`` URLs only: a leading space, an
+  embedded tab or a non-ASCII netloc can give another domain than
+  urlparse. Used where inputs are known clean and for the
+  DuckDB-oracle parity queries.
 
 At 100 TB the SQL variant is preferred wherever upstream guarantees
 well-formed URLs; the UDF is still vectorized (Arrow) and ~linear, but
@@ -132,37 +134,24 @@ def extract_domain_udf(urls: pd.Series) -> pd.Series:
     return extract_domain_vec(urls)
 
 
-def extract_domain_sql(url: Column) -> Column:
+def with_domain_sql(df, url_col: str = "url", out_col: str = "domain"):
     """JVM-side fast path: netloc → lowercase → port-strip (with the
-    ``:8080`` keep-quirk) → www-strip. Matches the UDF on well-formed
-    ``scheme://netloc/...`` URLs.
+    ``:8080`` keep-quirk) → www-strip, into ``out_col``. Matches the UDF
+    on well-formed ``scheme://netloc/...`` URLs.
 
     Why not ``parse_url(url,'HOST')``: Spark's parse_url always drops
     the port, which misses the reference's ``:8080`` quirk, and returns
     null for hosts it deems invalid where urlparse still returns a
     netloc.
-    """
-    netloc = F.lower(F.regexp_extract(url, r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)", 1))
-    deported = F.when(
-        netloc.contains(":") & ~netloc.endswith(":8080"),
-        F.split(netloc, ":").getItem(0),
-    ).otherwise(netloc)
-    return F.when(
-        deported.startswith("www."), F.substring(deported, 5, 2147483647)
-    ).otherwise(deported)
 
-
-def with_domain_sql(df, url_col: str = "url", out_col: str = "domain"):
-    """Staged-projection form of ``extract_domain_sql``.
-
-    The single-expression form inlines the netloc regexp subtree ~8×
-    into one CASE tree; runtime CSE dedups the work but Janino still
-    compiles the full expansion — measured ~4 s of cold-start per query
-    on the bench. Materializing netloc and the port-stripped form as
-    their own columns turns them into attribute references
-    (CollapseProject keeps multi-referenced non-cheap expressions in
-    separate projects), so the generated code is ~8× smaller and the
-    whole chain still fuses into one map stage.
+    Why staged columns: as one expression the netloc regexp subtree is
+    inlined ~8× into one CASE tree; runtime CSE dedups the work but
+    Janino still compiles the full expansion — measured ~4 s of
+    cold-start per query on the bench. Materializing netloc and the
+    port-stripped form as their own columns turns them into attribute
+    references (CollapseProject keeps multi-referenced non-cheap
+    expressions in separate projects), so the generated code is ~8×
+    smaller and the whole chain still fuses into one map stage.
     """
     url = F.col(url_col)
     df = df.withColumn(

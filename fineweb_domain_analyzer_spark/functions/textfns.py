@@ -107,7 +107,7 @@ def bpe_ish_token_count(text: Column) -> Column:
 # --- language ID (n-gram/stopword heuristic) -------------------------------
 
 # Tiny per-language stopword lists. A real deployment swaps in fastText
-# via a pandas UDF (see operators/quality.py:fasttext_like_langid_udf);
+# via a pandas UDF (see operators/quality.py:langid_udf_for);
 # this heuristic is the deterministic, JVM-only fallback that needs no
 # model artifact and is oracle-expressible in ANSI SQL.
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {

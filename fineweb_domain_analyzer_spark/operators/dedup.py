@@ -21,10 +21,8 @@ Design for 10^12 docs:
 * Verification (exact Jaccard on candidates) touches only the
   candidate pairs, never the full cross product.
 
-The md5-based hash family is deliberately chosen over xxhash64 for the
-signature path: it is reproducible in any engine (the DuckDB oracle
-mirrors it exactly), at the cost of some CPU. Swap `_hash_shingle` to
-xxhash64 for max throughput where cross-engine parity isn't needed.
+MinHash signatures, band keys and span hashes are md5-based: the
+DuckDB oracle mirrors md5 exactly, and DuckDB has no xxhash64.
 """
 
 from __future__ import annotations
@@ -89,12 +87,6 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     return word_shingles_from_tokens(ws_tokens(F.lower(text)), n)
 
 
-def _hash_shingle(shingle: Column, seed: int) -> Column:
-    """Engine-portable hash: md5 of 'seed:shingle' (lowercase hex —
-    min() over these strings is a valid minhash)."""
-    return F.md5(F.concat(F.lit(f"{seed}:"), shingle))
-
-
 def minhash_signature_from_shingles(shingles: Column, k: int = 16) -> Column:
     """array<string> of k minhashes from a MATERIALIZED shingle column:
     for each seed, min over the shingle array of md5(seed:shingle).
@@ -110,19 +102,6 @@ def minhash_signature_from_shingles(shingles: Column, k: int = 16) -> Column:
                 shingles, lambda s: F.md5(F.concat(i.cast("string"), F.lit(":"), s))
             )
         ),
-    )
-
-
-def minhash_signature_from_shingles_xx(shingles: Column, k: int = 16) -> Column:
-    """PRODUCTION hash family: array<bigint> of k minhashes via
-    xxhash64(seed, shingle) — JVM-native 64-bit hashing, no hex-string
-    materialization, markedly cheaper than k chained md5s (measured in
-    BENCH/minhash_family.json). Not engine-portable (DuckDB has no
-    xxhash64), so the md5 family remains the oracle-checked default;
-    both share every plan downstream of the signature."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda i: F.array_min(F.transform(shingles, lambda s: F.xxhash64(i, s))),
     )
 
 
@@ -142,41 +121,17 @@ def minhash_bands(sig: Column, bands: int = 4, rows_per_band: int = 4) -> Column
     )
 
 
-def minhash_bands_xx(
-    sig: Column, bands: int = 4, rows_per_band: int = 4
-) -> Column:
-    """Band keys for the xx family: xxhash64 of each band's slice
-    (hash functions accept array columns directly — no string
-    round-trip). Key rendered as string so both families share one
-    downstream schema."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.cast("int").alias("band_id"),
-            F.xxhash64(F.slice(sig, b * rows_per_band + 1, rows_per_band))
-            .cast("string")
-            .alias("band_key"),
-        ),
-    )
-
-
 def signature_frame(
     docs: DataFrame,
     id_col: str,
     text_col: str,
     k: int,
     shingle_n: int,
-    hash_family: str,
 ) -> DataFrame:
     """(id_col, sig) in one map pass — no explode, no shuffle. The ONE
     place the shingle→signature staging lives; both intra-batch LSH
     (``lsh_candidate_pairs``) and the cross-dump incremental index
     derive signatures here so the two paths can never diverge."""
-    sig_fn = (
-        minhash_signature_from_shingles_xx
-        if hash_family == "xx"
-        else minhash_signature_from_shingles
-    )
     return (
         docs.select(
             F.col(id_col), ws_tokens(F.lower(F.col(text_col))).alias("_tk")
@@ -184,7 +139,7 @@ def signature_frame(
         .select(
             id_col, word_shingles_from_tokens(F.col("_tk"), shingle_n).alias("_sh")
         )
-        .select(id_col, sig_fn(F.col("_sh"), k).alias("sig"))
+        .select(id_col, minhash_signature_from_shingles(F.col("_sh"), k).alias("sig"))
     )
 
 
@@ -193,16 +148,14 @@ def explode_bands(
     id_col: str,
     bands: int,
     rows_per_band: int,
-    hash_family: str,
     sig_col: str = "sig",
 ) -> DataFrame:
     """(id_col, sig) → (id_col, band_id, band_key). The ONE band-key
     derivation — a change here (salting, key format) reaches intra-batch
     and cross-dump banding together, keeping their join keys compatible."""
-    band_fn = minhash_bands_xx if hash_family == "xx" else minhash_bands
     return sigged.select(
         id_col,
-        F.explode(band_fn(F.col(sig_col), bands, rows_per_band)).alias("b"),
+        F.explode(minhash_bands(F.col(sig_col), bands, rows_per_band)).alias("b"),
     ).select(id_col, "b.band_id", "b.band_key")
 
 
@@ -213,7 +166,6 @@ def lsh_candidate_pairs(
     k: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    hash_family: str = "md5",
     max_bucket_size: int | None = None,
     cap_observation=None,
     sigs: DataFrame | None = None,
@@ -224,10 +176,6 @@ def lsh_candidate_pairs(
     (band_id, band_key) → in-bucket self-join → distinct. The join key
     is a hash, so bucket sizes are driven by true near-duplicate
     cluster sizes, not input skew.
-
-    ``hash_family``: "md5" (engine-portable, oracle-checked) or "xx"
-    (xxhash64, the production/scale choice — same plan, cheaper map
-    stage; BENCH/minhash_family.json quantifies the gap).
 
     ``max_bucket_size``: mega-duplicate-bucket guard. Bucket sizes
     track TRUE near-dup cluster sizes — which is exactly the danger on
@@ -257,37 +205,33 @@ def lsh_candidate_pairs(
     PERSISTED signature pass shared across several consumers — the
     incremental-dedup ingest computes signatures once and reuses them
     for cross-dump banding, estimate verification, intra-batch LSH and
-    the index write). Must use the same k/shingle_n/``hash_family``;
+    the index write). Must use the same k/shingle_n;
     when given, the shingle+signature map stage is skipped and only
     ids present in BOTH ``docs`` and ``sigs`` are banded.
     """
-    if hash_family not in ("md5", "xx"):
-        raise ValueError(
-            f"hash_family must be 'md5' or 'xx', got {hash_family!r}"
-        )
     rows_per_band = k // bands
     if sigs is not None:
-        sigs = validate_sigs(sigs, k, hash_family)
+        sigs = validate_sigs(sigs, k)
         sigged = sigs.join(
             docs.select(F.col(id_col)), id_col, "left_semi"
         ).select(F.col(id_col).alias("_id"), "sig")
     else:
-        sigged = signature_frame(
-            docs, id_col, text_col, k, shingle_n, hash_family
-        ).select(F.col(id_col).alias("_id"), "sig")
-    banded = explode_bands(sigged, "_id", bands, rows_per_band, hash_family)
+        sigged = signature_frame(docs, id_col, text_col, k, shingle_n).select(
+            F.col(id_col).alias("_id"), "sig"
+        )
+    banded = explode_bands(sigged, "_id", bands, rows_per_band)
     return _pairs_from_banded(banded, max_bucket_size, cap_observation)
 
 
-def validate_sigs(sigs: DataFrame, k: int, hash_family: str) -> DataFrame:
+def validate_sigs(sigs: DataFrame, k: int) -> DataFrame:
     """Guard for caller-precomputed ``sigs=`` frames: a frame built
-    with a different k or hash_family would silently yield wrong/short
-    band keys and lost candidates (recall loss, no error). Static
-    check: the sig element type must match the hash family (md5 →
-    string hex, xx → bigint). Runtime check: a JVM-side raise_error on
-    any row whose signature length != k — zero cost on the happy path,
-    a loud job failure instead of silent recall loss otherwise."""
-    from pyspark.sql.types import ArrayType, LongType, StringType
+    with a different k or hash would silently yield wrong/short band
+    keys and lost candidates (recall loss, no error). Static check:
+    the sig elements must be strings (md5 hex). Runtime check: a
+    JVM-side raise_error on any row whose signature length != k — zero
+    cost on the happy path, a loud job failure instead of silent
+    recall loss otherwise."""
+    from pyspark.sql.types import ArrayType, StringType
 
     sig_type = {f.name: f.dataType for f in sigs.schema.fields}.get("sig")
     if not isinstance(sig_type, ArrayType):
@@ -295,12 +239,10 @@ def validate_sigs(sigs: DataFrame, k: int, hash_family: str) -> DataFrame:
             f"sigs must have an array 'sig' column, got "
             f"{sig_type.simpleString() if sig_type else 'no sig column'}"
         )
-    want = LongType() if hash_family == "xx" else StringType()
-    if sig_type.elementType != want:
+    if sig_type.elementType != StringType():
         raise TypeError(
             f"sigs.sig element type {sig_type.elementType.simpleString()} "
-            f"does not match hash_family {hash_family!r} "
-            f"(expected {want.simpleString()})"
+            "is not string (MinHash signatures are md5 hex strings)"
         )
     guard = F.when(F.size("sig") == k, F.col("sig")).otherwise(
         F.raise_error(
@@ -389,7 +331,6 @@ def near_dedup_minhash(
     k: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    hash_family: str = "md5",
     collapse_exact: bool = True,
     max_bucket_size: int | None = None,
     cap_observation=None,
@@ -425,7 +366,7 @@ def near_dedup_minhash(
             "left_semi",
         )
         cands = lsh_candidate_pairs(
-            reps, id_col, text_col, k, bands, shingle_n, hash_family,
+            reps, id_col, text_col, k, bands, shingle_n,
             max_bucket_size, cap_observation, sigs,
         )
         verified = jaccard_on_pairs(
@@ -440,7 +381,7 @@ def near_dedup_minhash(
         )
         return verified.unionAll(exact_pairs)
     cands = lsh_candidate_pairs(
-        docs, id_col, text_col, k, bands, shingle_n, hash_family,
+        docs, id_col, text_col, k, bands, shingle_n,
         max_bucket_size, cap_observation, sigs,
     )
     verified = jaccard_on_pairs(cands, docs, id_col, text_col, shingle_n)
@@ -822,29 +763,10 @@ def contamination_check(
     )
 
 
-def _span_hashes(
-    tk: Column, span_len: int, hash_family: str = "md5"
-) -> Column:
-    """Hash of every ``span_len``-token window of a MATERIALIZED token
+def _span_hashes(tk: Column, span_len: int) -> Column:
+    """md5 of every ``span_len``-token window of a MATERIALIZED token
     array (empty when the doc is shorter than one span — a doc that
-    cannot contain the span cannot be contaminated by it).
-
-    ``hash_family``: "md5" (engine-portable — the DuckDB oracle mirrors
-    it exactly) or "xx" (xxhash64 over the window slice directly, no
-    join-to-string materialization — the production family; same
-    downstream plan, the hash is only ever a join/group key)."""
-    if hash_family == "xx":
-        idx = F.sequence(F.lit(1), F.size(tk) - (span_len - 1))
-        spans = F.transform(
-            idx, lambda i: F.xxhash64(F.slice(tk, i, span_len))
-        )
-        return F.when(F.size(tk) >= span_len, spans).otherwise(
-            F.array().cast("array<bigint>")
-        )
-    if hash_family != "md5":
-        raise ValueError(
-            f"hash_family must be 'md5' or 'xx', got {hash_family!r}"
-        )
+    cannot contain the span cannot be contaminated by it)."""
     idx = F.sequence(F.lit(1), F.size(tk) - (span_len - 1))
     spans = F.transform(
         idx, lambda i: F.md5(F.array_join(F.slice(tk, i, span_len), " "))
@@ -881,9 +803,7 @@ def exact_span_contamination(
     thousand 8-byte-keyed hashes), so the corpus side is map-only
     through the join; the only shuffle is the per-doc hit aggregation,
     keyed by id. Hash cost is O(tokens × span_len) bytes md5'd per
-    doc, embarrassingly parallel in the map stage; md5 keeps the
-    DuckDB oracle able to mirror the hash exactly (the xxhash64 trick
-    from the minhash family applies here too if CPU ever dominates).
+    doc, embarrassingly parallel in the map stage.
     """
     bench_spans = benchmark.select(
         F.explode(_span_hashes(F.col(tokens_col), span_len)).alias("span_h")
@@ -902,37 +822,25 @@ def exact_span_contamination(
     )
 
 
-def _dup_span_rows(spans: DataFrame, id_col: str, min_docs: int) -> DataFrame:
-    """The span rows whose hash occurs in >= ``min_docs`` DISTINCT docs.
-
-    min_docs == 2 (the standard setting): "shared" is exactly
-    min(id) != max(id) over a window partitioned by the hash — the
-    exploded span frame is computed ONCE and shuffled ONCE; the
+def _dup_span_rows(spans: DataFrame, id_col: str) -> DataFrame:
+    """The span rows whose hash occurs in at least two DISTINCT docs:
+    exactly min(id) != max(id) over a window partitioned by the hash.
+    The exploded span frame is computed ONCE and shuffled ONCE; the
     aggregate-then-self-join formulation recomputes the whole
     explode+hash map stage for the probe side and shuffles it again
     (measured 2.3x slower at 21M span rows — 84 s vs 36 s profile leg,
-    local[32]; BENCH/span_dedup.json holds the window-plan numbers).
-    min_docs > 2 needs a distinct count, which windows can't stream —
-    that path keeps the aggregate + join shape."""
+    local[32]; BENCH/span_dedup.json holds the window-plan numbers)."""
     from pyspark.sql.window import Window
 
-    if min_docs == 2:
-        w = Window.partitionBy("span_h").rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        return (
-            spans.withColumn("_mn", F.min(id_col).over(w))
-            .withColumn("_mx", F.max(id_col).over(w))
-            .filter(F.col("_mn") != F.col("_mx"))
-            .drop("_mn", "_mx")
-        )
-    shared = (
-        spans.groupBy("span_h")
-        .agg(F.count_distinct(F.col(id_col)).alias("_docs"))
-        .filter(F.col("_docs") >= min_docs)
-        .select("span_h")
+    w = Window.partitionBy("span_h").rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
     )
-    return spans.join(shared, "span_h")
+    return (
+        spans.withColumn("_mn", F.min(id_col).over(w))
+        .withColumn("_mx", F.max(id_col).over(w))
+        .filter(F.col("_mn") != F.col("_mx"))
+        .drop("_mn", "_mx")
+    )
 
 
 def duplicated_span_profile(
@@ -940,8 +848,6 @@ def duplicated_span_profile(
     span_len: int = 10,
     id_col: str = "doc_id",
     tokens_col: str = "tokens",
-    min_docs: int = 2,
-    hash_family: str = "md5",
 ) -> DataFrame:
     """Intra-corpus duplicated-span profile — the corpus-internal
     counterpart of ``exact_span_contamination``: instead of matching
@@ -953,9 +859,9 @@ def duplicated_span_profile(
     Language Models Better" — the suffix-array use case, re-expressed
     as a distributed hash join).
 
-    Output, per document that shares at least one span with >=
-    ``min_docs``-1 other documents: ``(id, n_spans, n_dup_spans,
-    dup_span_frac, first_dup_pos)`` — ``dup_span_frac`` is the fraction
+    Output, per document that shares at least one span with another
+    document: ``(id, n_spans, n_dup_spans, dup_span_frac,
+    first_dup_pos)`` — ``dup_span_frac`` is the fraction
     of the doc's windows that are corpus-duplicated (a removal/score
     signal), ``first_dup_pos`` the 1-based token offset of the earliest
     shared span. Docs with no shared spans are omitted.
@@ -966,11 +872,7 @@ def duplicated_span_profile(
     construction, skew only from true mega-boilerplate, which a window
     bucket absorbs — tested at 20k copies), the shared-span window
     test (``_dup_span_rows``), and a per-doc aggregation over only the
-    duplicated rows. ``hash_family="md5"`` (default) is mirrored
-    exactly by the DuckDB oracle; ``"xx"`` (xxhash64 over the window
-    slice, no string materialization) is the production family for
-    CPU-bound corpora — same plan, cheaper map stage
-    (BENCH/span_dedup.json quantifies the gap).
+    duplicated rows.
 
     At 10^12 docs the exploded frame is ~10^14 rows — run this the way
     the real pipelines do: per dump/shard (each dump's explode is
@@ -982,13 +884,13 @@ def duplicated_span_profile(
     """
     spans = corpus.select(
         F.col(id_col),
-        _span_hashes(F.col(tokens_col), span_len, hash_family).alias("_sp"),
+        _span_hashes(F.col(tokens_col), span_len).alias("_sp"),
     ).select(
         F.col(id_col),
         F.size(F.col("_sp")).cast("bigint").alias("n_spans"),
         F.posexplode(F.col("_sp")).alias("pos", "span_h"),
     )
-    hits = _dup_span_rows(spans, id_col, min_docs)
+    hits = _dup_span_rows(spans, id_col)
     return hits.groupBy(id_col, "n_spans").agg(
         F.count(F.lit(1)).alias("n_dup_spans"),
         F.round(F.count(F.lit(1)) / F.col("n_spans"), 4).alias("dup_span_frac"),
@@ -1001,13 +903,11 @@ def remove_duplicated_spans(
     span_len: int = 10,
     id_col: str = "doc_id",
     tokens_col: str = "tokens",
-    min_docs: int = 2,
-    hash_family: str = "md5",
 ) -> DataFrame:
     """Cut corpus-duplicated spans out of every document except one
     canonical occurrence — the REMOVAL half of the Lee et al. 2022
     span-dedup recipe (``duplicated_span_profile`` is the detection
-    half): for each span hash shared by ≥ ``min_docs`` docs, the
+    half): for each span hash shared by two or more docs, the
     occurrence with the smallest (doc id, position) survives; every
     other occurrence's ``span_len``-token window is deleted, and the
     text is rebuilt from the remaining tokens. Overlapping cut windows
@@ -1028,11 +928,11 @@ def remove_duplicated_spans(
 
     spans = corpus.select(
         F.col(id_col),
-        _span_hashes(F.col(tokens_col), span_len, hash_family).alias("_sp"),
+        _span_hashes(F.col(tokens_col), span_len).alias("_sp"),
     ).select(F.col(id_col), F.posexplode(F.col("_sp")).alias("pos", "span_h"))
     w = Window.partitionBy("span_h").orderBy(F.col(id_col), F.col("pos"))
     cut = (
-        _dup_span_rows(spans, id_col, min_docs)
+        _dup_span_rows(spans, id_col)
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") > 1)
         # pos is 0-based into the span array → 1-based token start

@@ -90,7 +90,6 @@ def label_against(
     k: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    hash_family: str = "md5",
     sigs: DataFrame | None = None,
     persist_intermediates: bool = False,
 ) -> DataFrame:
@@ -108,7 +107,7 @@ def label_against(
     intra-near is exact-Jaccard-verified (both texts in hand).
 
     ``sigs``: optional precomputed (id_col, sig) frame for the NEW
-    docs (same k/shingle_n/hash_family). The labeling plan consumes
+    docs (same k/shingle_n). The labeling plan consumes
     signatures four times (cross bands, cross verify, intra LSH —
     and ingest adds the index write); passing one PERSISTED frame
     turns four signature map passes into one.
@@ -159,14 +158,12 @@ def label_against(
     if sigs is not None:
         from fineweb_domain_analyzer_spark.operators.dedup import validate_sigs
 
-        new_sigs = validate_sigs(sigs, k, hash_family).join(
+        new_sigs = validate_sigs(sigs, k).join(
             reps.select(id_col), id_col, "left_semi"
         )
     else:
-        new_sigs = _with_signature(
-            reps, id_col, text_col, k, shingle_n, hash_family
-        )
-    new_bands = _explode_bands(new_sigs, id_col, bands, rows_per_band, hash_family)
+        new_sigs = _with_signature(reps, id_col, text_col, k, shingle_n)
+    new_bands = _explode_bands(new_sigs, id_col, bands, rows_per_band)
     old_sigs_r = old_sigs.select(
         F.col("doc_id").alias("_old_id"), F.col("sig").alias("_old_sig")
     )
@@ -175,7 +172,6 @@ def label_against(
         "_old_id",
         bands,
         rows_per_band,
-        hash_family,
     )
 
     # cross-dump near: band-bucket join, then signature-estimate
@@ -212,7 +208,6 @@ def label_against(
         k=k,
         bands=bands,
         shingle_n=shingle_n,
-        hash_family=hash_family,
         collapse_exact=False,  # reps are already exact-distinct
         sigs=new_sigs,
     )
@@ -265,7 +260,6 @@ class DedupIndex:
         k: int = 16,
         bands: int = 4,
         shingle_n: int = 3,
-        hash_family: str = "md5",
     ):
         if k % bands:
             raise ValueError(f"bands ({bands}) must divide k ({k})")
@@ -274,7 +268,6 @@ class DedupIndex:
         self.threshold = threshold
         self.k, self.bands, self.shingle_n = k, bands, shingle_n
         self.rows_per_band = k // bands
-        self.hash_family = hash_family
         self.exact_path = os.path.join(root, "exact")
         self.sigs_path = os.path.join(root, "sigs")
         self.checkpointer = Checkpointer(os.path.join(root, "_manifest.json"))
@@ -283,18 +276,23 @@ class DedupIndex:
 
     # -- parameter pinning ---------------------------------------------------
     #
-    # Signatures stored under one (k, bands, shingle_n, hash_family) are
+    # Signatures stored under one (k, bands, shingle_n, hash) are
     # meaningless under another: band keys stop matching and
     # sig_match_fraction's zip_with pads unequal-length arrays with
     # nulls, so the Jaccard estimate goes null, the >= threshold filter
     # drops it, and true cross-dump near-dups get labeled 'kept' with no
     # error. The params are therefore persisted next to the manifest on
-    # first ingest and re-validated on every reopen.
+    # first ingest and re-validated on every reopen. The hash is always
+    # md5; it stays in the pinned set so an index whose signatures came
+    # from another hash is refused on reopen.
 
-    _PARAM_KEYS = ("threshold", "k", "bands", "shingle_n", "hash_family")
+    _PARAM_KEYS = ("threshold", "k", "bands", "shingle_n")
 
     def _params(self) -> dict:
-        return {p: getattr(self, p) for p in self._PARAM_KEYS}
+        return {
+            **{p: getattr(self, p) for p in self._PARAM_KEYS},
+            "hash_family": "md5",
+        }
 
     def _validate_params(self) -> None:
         if not os.path.exists(self._params_path):
@@ -304,9 +302,9 @@ class DedupIndex:
         with open(self._params_path, encoding="utf-8") as f:
             stored = json.load(f)
         mismatch = {
-            p: (stored.get(p), getattr(self, p))
-            for p in self._PARAM_KEYS
-            if stored.get(p) != getattr(self, p)
+            p: (stored.get(p), v)
+            for p, v in self._params().items()
+            if stored.get(p) != v
         }
         if mismatch:
             detail = ", ".join(
@@ -357,7 +355,7 @@ class DedupIndex:
     def stored_sigs(self) -> DataFrame:
         return self._stored(
             self.sigs_path,
-            f"doc_id long, sig array<{'bigint' if self.hash_family == 'xx' else 'string'}>, _batch string",
+            "doc_id long, sig array<string>, _batch string",
         )
 
     # -- ingest -------------------------------------------------------------
@@ -382,7 +380,6 @@ class DedupIndex:
             k=self.k,
             bands=self.bands,
             shingle_n=self.shingle_n,
-            hash_family=self.hash_family,
             sigs=sigs,
             persist_intermediates=persist_intermediates,
         )
@@ -392,9 +389,7 @@ class DedupIndex:
     ) -> DataFrame:
         """(id_col, sig) for a batch with this index's parameters —
         the frame to persist and pass as ``sigs=``."""
-        return _with_signature(
-            docs, id_col, text_col, self.k, self.shingle_n, self.hash_family
-        )
+        return _with_signature(docs, id_col, text_col, self.k, self.shingle_n)
 
     def compact(self, cleanup: bool = True) -> str | None:
         """Fold every manifested batch partition into one compacted

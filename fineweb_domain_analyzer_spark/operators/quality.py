@@ -2,11 +2,9 @@
 
 North-rule layer (BASELINE.json north_star). Heuristics are pure
 Column expressions; model scorers (fastText langid, KenLM perplexity)
-are Arrow-batched pandas UDFs with a per-executor model cache. Since
-the real model artifacts aren't shipped in this environment, the
-default scorers are deterministic stand-ins with the same UDF
-signature, batch shape and caching structure — swap `_load_model` to
-point at real artifacts on a cluster.
+are Arrow-batched pandas UDFs over model artifacts shipped with
+``register_model_artifact``, with a per-executor model cache (see the
+artifact contract above ``register_model_artifact``).
 
 The corpus-derived unigram LM perplexity (``unigram_perplexity``) is a
 REAL distributed implementation: build the LM as a small aggregate
@@ -16,9 +14,6 @@ against an n-gram LM" — the LM table replaces the KenLM binary.
 """
 
 from __future__ import annotations
-
-import hashlib
-import math
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -313,26 +308,27 @@ def bigram_perplexity(
 #
 # Artifact contract (the real-cluster mechanism, works identically in
 # local mode):
-#   1. driver: ``register_model_artifact(spark, "langid", path)`` ships
+#   1. driver: ``register_model_artifact(spark, name, path)`` ships
 #      the file to every executor via ``sparkContext.addFile`` under the
 #      well-known name ``fwda_<name>.model``.
 #   2. worker: each UDF batch re-probes SparkFiles for that name (an
 #      os.path.exists — cheap); the CONSTRUCTED model is cached per
 #      Python worker keyed by (name, artifact_path), so registering an
-#      artifact mid-session takes effect without restarting workers.
-#   3. loader: JSON artifacts use the table-stub format below (tests
-#      exercise this end-to-end); binary artifacts load through the
-#      real libs (fasttext.load_model / kenlm.Model) when importable,
-#      and raise loudly if the lib is absent — an explicitly shipped
-#      artifact must never silently degrade to the heuristic.
-#   4. no artifact → deterministic heuristic stand-in (same interface).
+#      artifact mid-session takes effect without restarting workers,
+#      and a removed artifact is noticed by the next batch.
+#   3. loader: the artifact's leading bytes pick the format. A fastText
+#      .bin or an ARPA LM loads through the C++ wheel (fasttext /
+#      kenlm) when it is importable, else through the pure-Python
+#      reader of the same format (functions/model_formats.py); any
+#      other file raises.
+#   4. no artifact under the name → the UDF fails the job with an error
+#      naming the artifact. There is no stand-in model.
 #
 # Model interface: langid → .predict_batch(pd.Series) -> pd.Series of
-# labels; perplexity → .perplexity(str) -> float. The UDF plan is
-# identical for all three backends — swapping models touches zero
-# query code.
+# labels; perplexity → .perplexity(str) -> float. The UDF plan is the
+# same for every backend — swapping models touches zero query code.
 
-_MODEL_CACHE: dict[tuple[str, str | None], object] = {}
+_MODEL_CACHE: dict[tuple[str, str], object] = {}
 
 
 def artifact_basename(name: str) -> str:
@@ -382,47 +378,6 @@ def _find_artifact(name: str) -> str | None:
         return None
 
 
-class _HeuristicLangID:
-    """Deterministic stand-in honoring the fastText-wrapper interface."""
-
-    @staticmethod
-    def _guess(t: str | None) -> str | None:
-        if t is None:
-            return None
-        if not t:
-            return "unk"
-        cjk = sum(1 for c in t[:2000] if "一" <= c <= "鿿")
-        if cjk / max(len(t[:2000]), 1) > 0.15:
-            return "zh"
-        low = t.lower()
-        scores = {
-            "en": sum(low.count(f" {w} ") for w in ("the", "and", "of", "to")),
-            "de": sum(low.count(f" {w} ") for w in ("der", "und", "ist", "das")),
-            "fr": sum(low.count(f" {w} ") for w in ("le", "et", "est", "les")),
-            "es": sum(low.count(f" {w} ") for w in ("el", "es", "los", "para")),
-        }
-        best = max(scores, key=lambda k: (scores[k], -list(scores).index(k)))
-        return best if scores[best] > 0 else "unk"
-
-    def predict_batch(self, texts: pd.Series) -> pd.Series:
-        return texts.map(self._guess)
-
-
-class _TableLangID:
-    """JSON table-stub backend: exact-text lookup with a default label.
-    Honors the loader contract so tests can inject a real artifact file
-    without fastText being installed."""
-
-    def __init__(self, spec: dict):
-        self.table: dict = spec.get("table", {})
-        self.default: str = spec.get("default", "unk")
-
-    def predict_batch(self, texts: pd.Series) -> pd.Series:
-        return texts.map(
-            lambda t: None if t is None else self.table.get(t, self.default)
-        )
-
-
 class _FastTextLangID:
     """Wrapper over a real fasttext model (.bin)."""
 
@@ -441,42 +396,6 @@ class _FastTextLangID:
         )
 
 
-class _HeuristicCharLM:
-    """Deterministic stand-in honoring the KenLM-wrapper interface:
-    fixed hash-based character-trigram scorer."""
-
-    @staticmethod
-    def perplexity(t: str | None) -> float | None:
-        if t is None:
-            return None
-        if len(t) < 3:
-            return 1e6
-        s = 0.0
-        n = 0
-        for i in range(0, min(len(t), 3000) - 2):
-            tri = t[i : i + 3]
-            h = int.from_bytes(
-                hashlib.md5(tri.encode("utf-8", "ignore")).digest()[:4], "big"
-            )
-            # pseudo-probability in (2^-14, 2^-1]
-            s += (h % 14) + 1.0
-            n += 1
-        return round(2 ** (s / max(n, 1)), 4)
-
-
-class _TableCharLM:
-    """JSON table-stub backend: exact-text perplexity lookup."""
-
-    def __init__(self, spec: dict):
-        self.scores: dict = spec.get("scores", {})
-        self.default: float = float(spec.get("default", 1e6))
-
-    def perplexity(self, t: str | None) -> float | None:
-        if t is None:
-            return None
-        return float(self.scores.get(t, self.default))
-
-
 class _KenLM:
     """Wrapper over a real kenlm model (.arpa/.bin)."""
 
@@ -489,29 +408,8 @@ class _KenLM:
         return float(self.model.perplexity(t.replace("\n", " ")))
 
 
-def _construct_model(name: str, path: str | None):
-    if path is None:
-        return _HeuristicLangID() if name == "langid" else _HeuristicCharLM()
-    import json as _json
-
-    try:
-        with open(path, encoding="utf-8") as f:
-            spec = _json.load(f)
-        is_json = isinstance(spec, dict) and "kind" in spec
-    except (UnicodeDecodeError, ValueError):
-        is_json, spec = False, None
-    if is_json:
-        kind = spec["kind"]
-        if kind == "table-langid":
-            return _TableLangID(spec)
-        if kind == "table-perplexity":
-            return _TableCharLM(spec)
-        raise ValueError(f"unknown model artifact kind {kind!r} in {path}")
-    # Real-format artifact → sniff the bytes and load it. The C++ wheels
-    # are preferred when installed; otherwise the pure-Python readers in
-    # functions/model_formats.py parse the same on-disk format, so a
-    # shipped artifact ALWAYS loads for real — it never silently degrades
-    # to the heuristic, and an unrecognized file still raises loudly.
+def _construct_model(name: str, path: str):
+    """Load the artifact at ``path`` per item 3 of the contract above."""
     from fineweb_domain_analyzer_spark.functions.model_formats import (
         ArpaLM,
         PureFastTextSupervised,
@@ -534,9 +432,8 @@ def _construct_model(name: str, path: str | None):
         except ImportError:
             return ArpaLM(path)
     raise RuntimeError(
-        f"artifact {path} for {name!r} is neither a JSON table stub, a "
-        "fastText .bin, nor an ARPA LM — refusing to fall back to the "
-        "heuristic for an explicitly shipped artifact"
+        f"artifact {path} for {name!r} is neither a fastText .bin nor an "
+        "ARPA LM"
     )
 
 
@@ -544,35 +441,23 @@ def _load_model(name: str):
     """Per-Python-worker model cache keyed by (name, artifact path) so a
     mid-session artifact registration takes effect on reused workers."""
     path = _find_artifact(name)
+    if path is None:
+        raise FileNotFoundError(
+            f"no model artifact registered under {name!r} (no "
+            f"{artifact_basename(name)} in the SparkFiles root); ship one "
+            "with register_model_artifact(spark, name, path)"
+        )
     key = (name, path)
     if key not in _MODEL_CACHE:
         _MODEL_CACHE[key] = _construct_model(name, path)
     return _MODEL_CACHE[key]
 
 
-@pandas_udf(StringType())
-def fasttext_like_langid_udf(texts: pd.Series) -> pd.Series:
-    """fastText-shaped langid UDF. Backend resolved per the artifact
-    contract above (real .bin → fasttext; JSON stub → table; none →
-    deterministic heuristic). The Arrow batch shape, caching and plan
-    are identical for all backends."""
-    return _load_model("langid").predict_batch(texts)
-
-
-@pandas_udf(DoubleType())
-def kenlm_like_perplexity_udf(texts: pd.Series) -> pd.Series:
-    """KenLM-shaped perplexity UDF. Backend resolved per the artifact
-    contract above (real .arpa/.bin → kenlm; JSON stub → table; none →
-    deterministic hash-trigram stand-in)."""
-    m = _load_model("kenlm")
-    return texts.map(m.perplexity)
-
-
 def langid_udf_for(artifact_name: str):
-    """Parameterized variant of ``fasttext_like_langid_udf``: resolves
-    the model from a caller-chosen artifact name, so several langid
-    models (e.g. a production .bin and a fixture) can coexist in one
-    SparkContext without clobbering the default ``langid`` slot."""
+    """fastText-shaped langid UDF over the artifact registered as
+    ``artifact_name`` (see the artifact contract above). Each model has
+    its own name, so several langid models (e.g. a production .bin and
+    a fixture) coexist in one SparkContext."""
 
     @pandas_udf(StringType())
     def _udf(texts: pd.Series) -> pd.Series:
@@ -588,8 +473,8 @@ def langid_udf_for(artifact_name: str):
 
 
 def perplexity_udf_for(artifact_name: str):
-    """Parameterized variant of ``kenlm_like_perplexity_udf`` (see
-    ``langid_udf_for``)."""
+    """KenLM-shaped perplexity UDF over the artifact registered as
+    ``artifact_name`` (see ``langid_udf_for``)."""
 
     @pandas_udf(DoubleType())
     def _udf(texts: pd.Series) -> pd.Series:
@@ -602,22 +487,6 @@ def perplexity_udf_for(artifact_name: str):
         return texts.map(m.perplexity)
 
     return _udf
-
-
-def perplexity_bits_py(t: str | None) -> float | None:
-    """Driver-side mirror of kenlm_like_perplexity_udf for unit tests."""
-    if t is None:
-        return None
-    if len(t) < 3:
-        return 1e6
-    s = 0.0
-    n = 0
-    for i in range(0, min(len(t), 3000) - 2):
-        tri = t[i : i + 3]
-        h = int.from_bytes(hashlib.md5(tri.encode("utf-8", "ignore")).digest()[:4], "big")
-        s += (h % 14) + 1.0
-        n += 1
-    return round(math.pow(2, s / max(n, 1)), 4)
 
 
 # --- classifier-style quality score -----------------------------------------

@@ -2817,7 +2817,7 @@ def q64_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") < 300)
     old_exact = old.select(F.md5(F.col("text")).alias("text_md5"), "doc_id")
-    old_sigs = _with_signature(old, "doc_id", "text", 16, 3, "md5")
+    old_sigs = _with_signature(old, "doc_id", "text", 16, 3)
     batch2 = (
         docs.filter(F.col("doc_id") >= 300)
         .select((F.col("doc_id") + 10000).alias("doc_id"), "text")

@@ -93,13 +93,16 @@ def streaming_domain_stats(
     streaming pages frame. Emits the updated totals for every domain
     touched by each micro-batch; state persists in the checkpoint, so
     AvailableNow re-runs continue the counts instead of restarting
-    them (tests/test_streaming_stateful.py proves that)."""
+    them (tests/test_streaming_stateful.py proves that). The default
+    key is ``extract_domain_udf``, the batch ``with_domain`` default, so
+    a domain's streaming state and its batch stats share one key on
+    every url."""
     if domain_col is None:
         from fineweb_domain_analyzer_spark.functions.domains import (
-            extract_domain_sql,
+            extract_domain_udf,
         )
 
-        domain_col = extract_domain_sql(F.col("url"))
+        domain_col = extract_domain_udf(F.col("url"))
     keyed = pages.select(
         domain_col.cast("string").alias("domain"), F.col("warc_ts")
     )

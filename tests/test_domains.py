@@ -12,10 +12,10 @@ from pyspark.sql import functions as F
 
 from fineweb_domain_analyzer_spark.functions.domains import (
     extract_domain_py,
-    extract_domain_sql,
     extract_domain_udf,
     extract_tld_py,
     extract_tld_sql,
+    with_domain_sql,
 )
 
 CASES = [
@@ -79,11 +79,9 @@ def test_udf_matches_py(spark):
 def test_sql_variant_matches_udf_on_wellformed(spark):
     urls = [c[0] for c in CASES if "://" in c[0]]
     df = spark.createDataFrame([(u,) for u in urls], ["url"])
-    rows = (
-        df.withColumn("d_udf", extract_domain_udf("url"))
-        .withColumn("d_sql", extract_domain_sql(F.col("url")))
-        .collect()
-    )
+    rows = with_domain_sql(
+        df.withColumn("d_udf", extract_domain_udf("url")), "url", "d_sql"
+    ).collect()
     for r in rows:
         assert r["d_sql"] == r["d_udf"], r["url"]
 

@@ -196,19 +196,6 @@ class TestLabelOnly:
         assert index.processed_batches() == {"dump1"}
         assert {r["_batch"] for r in index.stored_exact().collect()} == {"dump1"}
 
-    def test_xx_family_same_labels(self, spark, tmp_path):
-        idx = DedupIndex(
-            spark, str(tmp_path / "xx"), threshold=0.75, hash_family="xx"
-        )
-        idx.ingest_batch(_docs(spark, BASE), "dump1")
-        lab = {
-            r["doc_id"]: r["drop_reason"]
-            for r in idx.ingest_batch(_docs(spark, DUMP2), "dump2").collect()
-        }
-        assert lab[101] == "exact_dup_cross"
-        assert lab[102] == "near_dup_cross"
-        assert lab[103] == "kept"
-
 
 class TestParamPinning:
     """Reopening an index with different MinHash parameters must fail
@@ -229,11 +216,20 @@ class TestParamPinning:
         index.ingest_batch(_docs(spark, BASE), "dump1")
         with pytest.raises(ValueError, match="k: index=16"):
             DedupIndex(spark, index.root, threshold=0.75, k=32, bands=4)
-        with pytest.raises(ValueError, match="hash_family"):
-            DedupIndex(
-                spark, index.root, threshold=0.75, k=16, bands=4,
-                hash_family="xx",
-            )
+
+    def test_reopen_index_of_another_hash_family_raises(self, spark, tmp_path):
+        """Signatures are md5; an index pinned with the xxhash64 family
+        ("xx") holds bigint signatures no ingest here can match."""
+        root = tmp_path / "xx_idx"
+        root.mkdir()
+        (root / "_params.json").write_text(json.dumps({
+            "threshold": 0.75, "k": 16, "bands": 4,
+            "shingle_n": 3, "hash_family": "xx",
+        }))
+        with pytest.raises(
+            ValueError, match="hash_family: index='xx' vs requested='md5'"
+        ):
+            DedupIndex(spark, str(root), threshold=0.75, k=16, bands=4)
 
     def test_reopen_with_matching_params_ok(self, spark, index):
         index.ingest_batch(_docs(spark, BASE), "dump1")
@@ -251,7 +247,7 @@ class TestSigsValidation:
         bad = spark.createDataFrame(
             [(101, [1, 2, 3])], "doc_id long, sig array<bigint>"
         )
-        with pytest.raises(TypeError, match="does not match hash_family"):
+        with pytest.raises(TypeError, match="element type bigint is not string"):
             index.label_batch(_docs(spark, DUMP2), sigs=bad)
 
     def test_wrong_k_fails_the_job(self, spark, index):

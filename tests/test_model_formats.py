@@ -158,7 +158,7 @@ class TestDispatch:
 
         p = tmp_path / "junk.model"
         p.write_bytes(b"\x01\x02\x03garbage")
-        with pytest.raises(RuntimeError, match="refusing to fall back"):
+        with pytest.raises(RuntimeError, match="neither a fastText .bin nor an ARPA LM"):
             _construct_model("langid", str(p))
 
 

@@ -21,10 +21,10 @@ from fineweb_domain_analyzer_spark.functions.textfns import (
     ws_token_count,
 )
 from fineweb_domain_analyzer_spark.operators.quality import (
-    fasttext_like_langid_udf,
     gopher_keep,
-    kenlm_like_perplexity_udf,
-    perplexity_bits_py,
+    langid_udf_for,
+    perplexity_udf_for,
+    register_model_artifact,
     unigram_perplexity,
     with_quality_features,
 )
@@ -250,22 +250,6 @@ def test_langid_heuristic(spark):
     assert got[6] == "unk"
 
 
-def test_fasttext_like_udf(spark):
-    df = spark.createDataFrame(
-        [(1, "the cat and the dog of the house to play"), (2, "這是中文的一段長文字內容測試")],
-        ["id", "text"],
-    ).withColumn("lid", fasttext_like_langid_udf(F.col("text")))
-    got = {r["id"]: r["lid"] for r in df.collect()}
-    assert got[1] == "en"
-    assert got[2] == "zh"
-
-
-def test_kenlm_like_udf_deterministic(spark):
-    txt = "some stable text for perplexity"
-    df = _one(spark, txt).withColumn("ppl", kenlm_like_perplexity_udf(F.col("text")))
-    assert df.collect()[0]["ppl"] == perplexity_bits_py(txt)
-
-
 def test_unigram_perplexity(spark):
     docs = spark.createDataFrame(
         [(1, "a a a a"), (2, "a a b c")], ["doc_id", "text"]
@@ -433,66 +417,46 @@ def test_langid_monster_doc_no_packed_overflow(spark):
         assert r["langid"] == r["want"], r["url"]
 
 
-def test_model_artifact_pluggability(spark, tmp_path):
-    """VERDICT r2 item 8: swap the stand-in scorers for real artifact
-    files through the loader contract WITHOUT touching any plan code.
-    JSON table-stub artifacts ship via register_model_artifact
-    (sparkContext.addFile — the real-cluster mechanism) and the same
-    UDF column expressions pick them up; deleting the artifact from the
-    SparkFiles root reverts reused workers to the heuristic (the model
-    cache is keyed by (name, artifact path))."""
-    import json
+def test_unregistered_artifact_fails_the_job(spark):
+    """A model UDF over a name with no registered artifact fails the
+    job with an error naming the artifact; there is no stand-in model."""
+    df = _one(spark, "the cat and the dog of the house")
+    for udf in (langid_udf_for("unregistered"), perplexity_udf_for("unregistered")):
+        with pytest.raises(
+            Exception, match="no model artifact registered under 'unregistered'"
+        ):
+            df.select(udf(F.col("text"))).collect()
+
+
+def test_removed_artifact_is_noticed_by_reused_worker(spark):
+    """Workers re-probe the SparkFiles root every batch and cache models
+    by (name, artifact path): once the staged artifact is removed, a
+    reused worker raises instead of serving its cached model."""
     import os
 
     from pyspark import SparkFiles
 
-    from fineweb_domain_analyzer_spark.operators.quality import (
-        artifact_basename,
-        register_model_artifact,
+    from fineweb_domain_analyzer_spark.operators.quality import artifact_basename
+
+    art = os.path.join(
+        os.path.dirname(__file__), "..", "fineweb_domain_analyzer_spark", "artifacts"
     )
+    register_model_artifact(spark, "langid_rm", os.path.join(art, "langid_marker.bin"))
+    register_model_artifact(spark, "kenlm_rm", os.path.join(art, "tiny_unigram.arpa"))
+    df = _one(spark, "the a data")
+    lid = langid_udf_for("langid_rm")(F.col("text"))
+    ppl = F.round(perplexity_udf_for("kenlm_rm")(F.col("text")), 4)
+    got = df.select(lid.alias("lid"), ppl.alias("ppl")).collect()[0]
+    # unigram ARPA by hand: the(-0.5)+a(-0.75)+data(-1.0)+eos(-1.0) over 4
+    assert (got["lid"], got["ppl"]) == ("gen", round(10 ** (3.25 / 4), 4))
 
-    df = spark.createDataFrame(
-        [(1, "the cat and the dog of the house"), (2, "mystery words")],
-        ["id", "text"],
-    )
-    lid_col = fasttext_like_langid_udf(F.col("text")).alias("lid")
-    ppl_col = kenlm_like_perplexity_udf(F.col("text")).alias("ppl")
-
-    # baseline: heuristic backend
-    base = {r["id"]: (r["lid"], r["ppl"]) for r in df.select("id", lid_col, ppl_col).collect()}
-    assert base[1][0] == "en"
-    assert base[2][1] == perplexity_bits_py("mystery words")
-
-    # inject artifacts honoring the loader contract
-    lang_art = tmp_path / "langid.json"
-    lang_art.write_text(json.dumps({
-        "kind": "table-langid",
-        "table": {"the cat and the dog of the house": "xx"},
-        "default": "yy",
-    }))
-    ppl_art = tmp_path / "ppl.json"
-    ppl_art.write_text(json.dumps({
-        "kind": "table-perplexity",
-        "scores": {"mystery words": 42.5},
-        "default": 7.0,
-    }))
-    register_model_artifact(spark, "langid", str(lang_art))
-    register_model_artifact(spark, "kenlm", str(ppl_art))
-    try:
-        got = {r["id"]: (r["lid"], r["ppl"]) for r in df.select("id", lid_col, ppl_col).collect()}
-        # identical plan, swapped backend
-        assert got[1] == ("xx", 7.0)
-        assert got[2] == ("yy", 42.5)
-    finally:
-        # local-mode cleanup: removing the staged file reverts workers
-        # (they re-probe the SparkFiles root every batch)
-        for name in ("langid", "kenlm"):
-            p = os.path.join(SparkFiles.getRootDirectory(), artifact_basename(name))
-            if os.path.exists(p):
-                os.remove(p)
-
-    back = {r["id"]: (r["lid"], r["ppl"]) for r in df.select("id", lid_col, ppl_col).collect()}
-    assert back == base
+    for name in ("langid_rm", "kenlm_rm"):
+        os.remove(os.path.join(SparkFiles.getRootDirectory(), artifact_basename(name)))
+    for name, col in (("langid_rm", lid), ("kenlm_rm", ppl)):
+        with pytest.raises(
+            Exception, match=f"no model artifact registered under '{name}'"
+        ):
+            df.select(col).collect()
 
 
 class TestQualityScoreAndBudget:

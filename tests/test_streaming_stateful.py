@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from fineweb_domain_analyzer_spark.functions.domains import extract_domain_sql
+from fineweb_domain_analyzer_spark.operators.filtering import with_domain
 from fineweb_domain_analyzer_spark.sources.pages import synth_pages
 from fineweb_domain_analyzer_spark.streaming import read_pages_stream
 from fineweb_domain_analyzer_spark.streaming.stateful import streaming_domain_stats
@@ -39,9 +39,7 @@ def _batch_truth(spark, in_dir):
     pages = spark.read.parquet(in_dir)
     return {
         r["domain"]: (r["count"], r["first_seen"], r["last_seen"])
-        for r in pages.select(
-            extract_domain_sql(F.col("url")).alias("domain"), "warc_ts"
-        )
+        for r in with_domain(pages)
         .groupBy("domain")
         .agg(
             F.count(F.lit(1)).alias("count"),
@@ -75,15 +73,23 @@ def test_state_accumulates_across_runs(spark, tmp_path):
 
     # second dump → second run resumes state from the checkpoint: the
     # emitted counts must be CUMULATIVE, equal to a batch agg over the
-    # union of both dumps — not a restart at the new files
+    # union of both dumps — not a restart at the new files. Two of its
+    # urls sit outside the JVM domain expression's safe subset: urlparse
+    # strips the leading space and the tab, so both belong to
+    # example.com in the batch domain
+    messy = F.when(F.col("url").endswith("/p/348"), " http://Example.com/x")
+    messy = messy.when(F.col("url").endswith("/p/349"), "http://exam\tple.com/y")
     synth_pages(
         spark, 150, n_domains=N_DOMAINS, seed=8, partitions=1, start=200
-    ).write.mode("append").parquet(in_dir)
+    ).withColumn("url", messy.otherwise(F.col("url"))).write.mode(
+        "append"
+    ).parquet(in_dir)
     _run_once(spark, in_dir, out_dir, ckpt)
     truth = _batch_truth(spark, in_dir)
     latest = _latest_state(spark, out_dir)
     # domains untouched by batch 2 keep their batch-1 stats; every
     # domain emitted so far must match the batch truth
     assert latest == truth
+    assert truth["example.com"][0] == 2
     total = sum(c for c, _, _ in latest.values())
     assert total == 350
